@@ -3,16 +3,16 @@
 store. Run from either tree root (PYTHONPATH=$PWD):
 
   python bench_r18/cc_ab.py time            # 3 trials of dup_groups
-  python bench_r18/cc_ab.py plan <outfile>  # round-2 join executed plan
+  python bench_r18/cc_ab.py plan <outfile> [checkpoint|bucketed]
+                                            # round-2 join executed plan
 
-The synthetic graph is 2M chain edges (500k chains of length 5, diameter 4
-— several SMJ rounds). autoBroadcastJoinThreshold=-1 forces the at-scale
-regime where the label frame does NOT broadcast, which is exactly where
-the per-round edge exchange lives. NEXGAP_CC_BUCKET_MIN_EDGES is taken
-from the environment (set =1 to force the bucketed store on the new tree;
-the r17 tree ignores it).
+The synthetic graph is 2M chain pairs (500k chains of length 5, diameter 4
+— several SMJ rounds), i.e. 4M symmetric edges: at dedup.CC_BUCKET_MIN_EDGES
+(4M), so ``time`` runs the bucketed edge store. autoBroadcastJoinThreshold=-1
+forces the at-scale regime where the label frame does NOT broadcast, which
+is exactly where the per-round edge exchange lives. ``plan`` captures the
+round join over either edge layout (default: bucketed).
 """
-import os
 import sys
 import time
 
@@ -43,14 +43,12 @@ def main() -> None:
             out.write.format("noop").mode("overwrite").save()
             print(
                 f"[cc_ab] trial {trial}: {time.perf_counter() - t0:.3f}s "
-                f"(gate={os.environ.get('NEXGAP_CC_BUCKET_MIN_EDGES', 'default')})",
+                f"(gate={dedup.CC_BUCKET_MIN_EDGES})",
                 flush=True,
             )
         return
-    # plan mode: reproduce one loop round over the edge frame the loop
-    # would use (checkpoint on the r17 tree / without the env; bucketed
-    # with NEXGAP_CC_BUCKET_MIN_EDGES=1 on the r18 tree) and dump the
-    # executed round-2 join plan
+    # plan mode: reproduce one loop round over the chosen edge layout and
+    # dump the executed round-2 join plan
     sym = (
         pairs.select(F.col("a").alias("n"), F.col("b").alias("m"))
         .unionByName(pairs.select(F.col("b").alias("n"), F.col("a").alias("m")))
@@ -58,9 +56,7 @@ def main() -> None:
     )
     edges = materialize(sym)
     cleanup = None
-    if hasattr(dedup, "_bucketed_edge_store") and os.environ.get(
-        "NEXGAP_CC_BUCKET_MIN_EDGES"
-    ) == "1":
+    if (sys.argv[3:] or ["bucketed"])[0] == "bucketed":
         edges, cleanup = dedup._bucketed_edge_store(edges)
     labels = materialize(
         edges.groupBy("n")
@@ -69,10 +65,10 @@ def main() -> None:
     )
     neigh = (
         edges.join(labels.withColumnRenamed("n", "m"), "m")
-        .select("n", "label")
-        .unionByName(labels)
+        .select("n", "label", F.lit(None).alias("own"))
+        .unionByName(labels.withColumn("own", F.col("label")))
         .groupBy("n")
-        .agg(F.min("label").alias("new_label"))
+        .agg(F.min("label").alias("label"), F.max("own").alias("own"))
     )
     neigh.write.format("noop").mode("overwrite").save()
     txt = neigh._jdf.queryExecution().executedPlan().toString()

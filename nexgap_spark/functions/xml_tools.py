@@ -304,7 +304,10 @@ def extract_tool_calls(
         return ""
 
     text = RE_BATCH_AGENT.sub(on_batch_agent, text)
-    return text.strip(), calls
+    # a block regex can swallow a stray close tag, leaving an open tag the
+    # restore above did not close; close it now so the cleaned content is
+    # stable under a second extraction
+    return restore_closing_tags(text.strip()), calls
 
 
 def iter_tool_results(content: str) -> Iterator[tuple[str, str]]:

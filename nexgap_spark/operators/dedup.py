@@ -628,6 +628,13 @@ def ngram_jaccard_pairs(
     )
 
 
+# Edge count from which dup_groups writes its bucketed edge store. Below it
+# the label frame broadcasts (4M edges ≈ the 64 MB broadcast threshold at
+# 16 B/row), the edge side is never exchanged, and the store's one-time
+# write would be pure overhead.
+CC_BUCKET_MIN_EDGES = 4_000_000
+
+
 def _bucketed_edge_store(edges: DataFrame):
     """Write the materialized symmetric edge list ONCE as a bucketed-and-
     sorted external table on ``m`` and return (bucketed_scan, cleanup).
@@ -639,9 +646,8 @@ def _bucketed_edge_store(edges: DataFrame):
     lives under the reliable checkpoint dir when one is configured, else
     the session temp root; one table per call, dropped by ``cleanup``.
 
-    Bucket count: NEXGAP_CC_EDGE_BUCKETS or defaultParallelism — the
-    cluster-wide core count is the natural reduce-side width for the loop
-    joins this table feeds."""
+    Bucket count: defaultParallelism — the cluster-wide core count is the
+    natural reduce-side width for the loop joins this table feeds."""
     import uuid
 
     from nexgap_spark.session import _local_mat_root
@@ -652,9 +658,7 @@ def _bucketed_edge_store(edges: DataFrame):
     ckdir = spark.sparkContext.getCheckpointDir()
     root = ckdir.rstrip("/") if ckdir else _local_mat_root()
     path = f"{root}/{name}"
-    buckets = int(
-        os.environ.get("NEXGAP_CC_EDGE_BUCKETS", "0")
-    ) or spark.sparkContext.defaultParallelism
+    buckets = spark.sparkContext.defaultParallelism
     write_bucketed(
         edges, name, path, bucket_cols=["m"], buckets=buckets, sort_cols=["m"]
     )
@@ -689,211 +693,92 @@ def dup_groups(
     round, a node adopts the minimum label among itself and its neighbors;
     stop when a round changes nothing. Rounds needed = graph diameter — for
     near-dup graphs that is tiny (dup clusters are cliques or short chains),
-    so the loop count is data-bounded like J3's parent walk, not O(V).
+    so the loop count is data-bounded, not O(V). A component longer than
+    ``max_iterations`` rounds is NOT final: the loop warns and reports
+    ``converged=0`` on the returned plan.
 
     Each round is one groupBy over the edge list (shuffle on node id); labels
-    stay (node, label) pairs — at 100 TB this is the standard large-scale CC
-    recipe short of GraphFrames.
+    stay (node, label) pairs — the standard large-scale CC recipe short of
+    GraphFrames. Round 1 is computed directly as ``least(n, min(m))`` off the
+    edge list (every node starts labeled with itself), which saves the node
+    set, the join and the union of the general round.
 
-    Materialization discipline: the edge list is eagerly localCheckpoint'ed
-    ONCE before the loop (its upstream is typically the whole
-    shingle→minhash→LSH→verify pipeline — without this, every round AND every
-    convergence check re-executes that pipeline from the parquet scan; fixing
-    it took q43 at sf0.1 from 43 s to ~5 s). Each round's label frame is
-    likewise checkpointed so the convergence check and the next round both
-    read materialized rows instead of replaying a lineage that deepens by
-    one join per round. Checkpoints route through session.materialize: by
-    default localCheckpoint (executor block storage — fast, but lineage
-    truncation makes the loop unrecoverable if an executor dies), and
-    automatically a RELIABLE `checkpoint()` whenever the context has a
-    checkpoint dir configured (`setCheckpointDir`), which makes the loop
-    survive executor loss — measured on the round-15 standalone-cluster
-    harness (tools_cluster.py: kill -9 of an executor mid-round, hashes
-    equal to the clean run).
+    Materialization: the symmetric edge list is materialized ONCE before the
+    loop (its upstream is typically the whole shingle→minhash→LSH→verify
+    pipeline, which every round would otherwise replay), and each round's
+    label frame is materialized so the next round reads rows instead of a
+    lineage that deepens by one join per round. Both route through
+    session.materialize, so a configured checkpoint dir makes the loop
+    survive executor loss. Above ``CC_BUCKET_MIN_EDGES`` edges the edge list
+    is written once as a bucketed-and-sorted table on ``m``, so the rounds'
+    sort-merge joins read a pre-clustered edge side instead of re-exchanging
+    it every round.
 
-    Convergence detection: labels are monotone non-increasing under
-    hash-min, so for numeric ids an unchanged label SUM (exact, decimal
-    accumulator) ⟺ a fixpoint — one cheap aggregate over the checkpointed
-    labels instead of an old⋈new compare join per round. The sum is
-    collected via ``observe()`` DURING each round's materialize action
-    (r17): a CollectMetrics node on the materialized plan costs nothing
-    extra, where the previous separate ``.agg().first()`` was one more
-    job per round locally and one more full read of the label frame per
-    round at scale.
-
-    Round-1 shortcut (r17): with every label initialized to its own id,
-    round 1's "min over self and neighbors" is exactly
-    ``least(n, min(m))`` — ONE aggregate over the edge list. The general
-    round shape (node-set distinct → labels⋈edges join → union → groupBy)
-    spends two extra edge-sized shuffles plus a join to compute the same
-    frame, so round 1 is peeled off and computed directly. Measured
-    (isolated loop A/B, 605 synthetic pairs incl. a 6-chain, best-of-3
-    ×2 interleaved): old 2.44-2.55 s vs new 1.62-2.12 s, ~30% off the
-    loop; inside q43 at sf0.1 the loop is a minority share so the
-    end-to-end delta sits inside this sandbox's noise band, but at scale
-    the saving is one fewer full label-frame read per round plus two
-    edge-sized round-1 shuffles. Plan diff: round 1 drops from 3
-    exchanges + 1 join to 1 exchange.
+    Convergence: labels only decrease, so a round changed nothing iff no
+    node's new label is below its previous one. Each round's groupBy carries
+    the previous label as ``own`` next to the new minimum, and the count of
+    ``label < own`` is observed during the round's own materialize action —
+    one check for every id type, and no extra job.
     """
     from pyspark.sql import Observation
 
+    if max_iterations < 1:
+        raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
     sym = (
         pairs.select(F.col(a_col).alias("n"), F.col(b_col).alias("m"))
         .unionByName(pairs.select(F.col(b_col).alias("n"), F.col(a_col).alias("m")))
         .distinct()
     )
-    # exact edge count fused into the materialize action (zero extra jobs)
-    # — it gates the bucketed edge store below
+    # exact edge count fused into the materialize action: it gates the
+    # bucketed edge store
     edge_obs = Observation(f"dup_groups_edges_{next(_OBSERVE_SEQ)}")
     edges = materialize(sym.observe(edge_obs, F.count(F.lit(1)).alias("c")))
-    n_edges = int(edge_obs.get["c"])
-    # Bucketed edge store (r18, guide §2.4/§6; closes the r17 probe): the
-    # loop joins the STATIC edge list by ``m`` every round. While the label
-    # frame broadcasts (small graphs) the edges are never exchanged, but at
-    # scale labels outgrow the broadcast threshold, the join goes
-    # sort-merge, and each round re-exchanges (and re-sorts) the edge list
-    # — the r17 probe showed checkpoint-carried partitioning cannot remove
-    # that (LogicalRDD attribute rewrites defeat ENSURE_REQUIREMENTS).
-    # Writing the materialized edges ONCE as a bucketed-and-sorted table on
-    # ``m`` gives every round an exchange-free, sort-free edge side; the
-    # one-time cost is a keyed write of the edge list (≈ one of the
-    # per-round exchanges it removes). Size-gated on the exact edge count:
-    # below the gate labels broadcast anyway and the write would be pure
-    # overhead — the default (4M edges ≈ the 64 MB label-broadcast
-    # threshold at 16 B/row) keeps every toy/local run on the old shape.
     edge_store_cleanup = None
-    min_bucket_edges = int(
-        os.environ.get("NEXGAP_CC_BUCKET_MIN_EDGES", str(4_000_000))
-    )
-    if n_edges >= min_bucket_edges:
+    if int(edge_obs.get["c"]) >= CC_BUCKET_MIN_EDGES:
         edges, edge_store_cleanup = _bucketed_edge_store(edges)
+    # Reliable mode: round N's materialize reads only round N-1 and the
+    # returned frame reads only the last round, so a generation handle keeps
+    # the live checkpoint dirs at 2 instead of one per round. The edge list
+    # is NOT on the handle — every round reads it.
+    gen = MaterializeGen(keep=2)
+
+    def _round(frame: DataFrame) -> tuple[DataFrame, int]:
+        """Materialize one round's (n, label, own) frame as (n, label) and
+        return it with the number of nodes whose label dropped."""
+        obs = Observation(f"dup_groups_changed_{next(_OBSERVE_SEQ)}")
+        changed = F.count(F.when(F.col("label") < F.col("own"), 1))
+        out = materialize(
+            frame.observe(obs, changed.alias("c")).select("n", "label"), gen=gen
+        )
+        return out, int(obs.get["c"])
+
     try:
-        # hash-min labels only ever DECREASE, so for INTEGER node ids the label
-        # SUM is an exact fixpoint detector: unchanged sum ⟺ unchanged labels
-        # (the decimal(38,0) accumulator is exact for integers). That saves the
-        # old-vs-new compare join each round (one join + its shuffle per round,
-        # measured ~25% of q43). Float/decimal ids would round in the
-        # accumulator — a chain of labels closer than 1.0 apart could falsely
-        # report convergence — so they keep the exact per-row compare, as do
-        # strings.
-        numeric = dict(edges.dtypes)["n"] in ("tinyint", "smallint", "int", "bigint")
-        prev_sum = object()  # sentinel: never equal to a first-round sum
-        converged = False
-        # Reliable mode: per-round label materializations are LINEAR (round N
-        # reads only round N-1; the fallback compare reads N-1 and N; the
-        # returned frame reads only the final round), so a generation handle
-        # bounds live checkpoint-store directories to 2 instead of ~diameter
-        # (VERDICT r16 item 4 / ADVICE: the CC loop otherwise leaves one dead
-        # edge-sized parquet dir per round until job end). The edge list is
-        # NOT on the handle — every round reads it.
-        gen = MaterializeGen(keep=2)
-
-        def _mat_with_sum(frame: DataFrame):
-            """Materialize one round's (n, label) frame; when the ids are
-            numeric, fuse the convergence sum into the SAME action via
-            observe() — zero extra jobs, zero extra reads."""
-            if not numeric:
-                return materialize(frame, gen=gen), None
-            from pyspark.sql import Observation
-
-            obs = Observation(f"dup_groups_sum_{next(_OBSERVE_SEQ)}")
-            out = materialize(
-                frame.observe(
-                    obs, F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-                ),
-                gen=gen,
-            )
-            return out, obs.get["s"]
-
-        if max_iterations < 1:
-            raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
-        # round 1, peeled: every node starts labeled with itself, so the
-        # first propagation is least(own id, min neighbor id) directly off
-        # the edge list — no node-set distinct, no join, no union.
-        labels, cur_sum = _mat_with_sum(
+        labels, changed = _round(
             edges.groupBy("n")
             .agg(F.min("m").alias("_mm"))
-            .select("n", F.least(F.col("n"), F.col("_mm")).alias("label"))
+            .select(
+                "n",
+                F.least(F.col("n"), F.col("_mm")).alias("label"),
+                F.col("n").alias("own"),
+            )
         )
         rounds_used = 1
-        if numeric:
-            if cur_sum is None:
-                if labels.isEmpty():
-                    # no edges at all: zero nodes is trivially a fixpoint
-                    converged = True
-                else:
-                    # decimal overflow on round 1: the sum is unusable — keep
-                    # the never-equal sentinel so round 2 cannot falsely match
-                    cur_sum = object()
-            prev_sum = cur_sum
-        else:
-            # string/decimal ids: round 1 changed nothing iff no node adopted
-            # a neighbor's smaller id
-            converged = (
-                labels.filter(F.col("label") != F.col("n")).limit(1).count() == 0
-            )
-        for _ in range(max_iterations - 1):
-            if converged:
-                break
-            # candidate label per node: min over neighbors' labels and its own
+        while changed and rounds_used < max_iterations:
+            # new label = min over the node's own label and its neighbors'
             neigh = (
                 edges.join(labels.withColumnRenamed("n", "m"), "m")
-                .select("n", "label")
-                .unionByName(labels)
+                .select("n", "label", F.lit(None).alias("own"))
+                .unionByName(labels.withColumn("own", F.col("label")))
                 .groupBy("n")
-                .agg(F.min("label").alias("new_label"))
+                .agg(F.min("label").alias("label"), F.max("own").alias("own"))
             )
-            # previous round's checkpoint blocks are dead once the new one
-            # exists. DataFrame.unpersist() would NOT free them (it only
-            # uncaches CacheManager entries; checkpoint blocks belong to the
-            # underlying RDD) — the ContextCleaner releases them once the
-            # previous round's frame is garbage-collected, which the loop's
-            # rebinding of `labels` enables. Bounded rounds keep the
-            # transient footprint small.
+            labels, changed = _round(neigh)
             rounds_used += 1
-            if numeric:
-                new_labels, cur_sum = _mat_with_sum(
-                    neigh.select("n", F.col("new_label").alias("label"))
-                )
-                if cur_sum is None:
-                    # decimal(38,0) overflow: non-ANSI Spark yields a NULL sum
-                    # instead of raising, and two consecutive NULLs would fake
-                    # convergence (None == None) with non-final labels. Fall
-                    # back to the per-row compare join for this round.
-                    changed = (
-                        new_labels.withColumnRenamed("label", "new_label")
-                        .join(labels, "n")
-                        .filter(F.col("new_label") != F.col("label"))
-                        .limit(1)
-                        .count()
-                    )
-                    labels = new_labels
-                    if changed == 0:
-                        converged = True
-                        break
-                    continue
-                labels = new_labels
-                if cur_sum == prev_sum:
-                    converged = True
-                    break
-                prev_sum = cur_sum
-            else:
-                merged = materialize(labels.join(neigh, "n"), gen=gen)
-                changed = (
-                    merged.filter(F.col("new_label") != F.col("label")).limit(1).count()
-                )
-                labels = merged.select("n", F.col("new_label").alias("label"))
-                if changed == 0:
-                    converged = True
-                    break
+        converged = not changed
         if not converged:
-            # no silent caps: an unconverged run means some chain-shaped
-            # component is longer than max_iterations and its labels are NOT
-            # final — near-dup graphs should converge in a handful of rounds,
-            # so this firing at all is a data-shape signal worth surfacing. A
-            # driver print is invisible on a cluster; warn AND carry the status
-            # as an observed metric on the returned plan (below) so whoever
-            # runs the consuming action sees it in listener/CollectMetrics.
+            # a chain-shaped component is longer than max_iterations and its
+            # labels are NOT final. A driver print is invisible on a cluster:
+            # warn AND carry the status on the returned plan (below).
             import warnings
 
             warnings.warn(
@@ -903,15 +788,14 @@ def dup_groups(
                 stacklevel=2,
             )
     finally:
-        # the returned frame reads only the final round's materialized
-        # labels, never the edge table — safe to drop it here (and on
-        # any mid-loop failure)
+        # the returned frame reads only the last round's labels, never the
+        # edge table — safe to drop it here (and on any mid-loop failure)
         if edge_store_cleanup is not None:
             edge_store_cleanup()
     out = labels.select(F.col("n"), F.col("label").alias("group_id"))
-    # convergence is decided driver-side (the loop above ran eagerly via
-    # localCheckpoint), so the metric carries literals — zero extra compute
-    # on the consuming action, but visible wherever the plan is executed.
+    # convergence was decided driver-side by the eager loop, so the metric
+    # carries literals: zero extra compute on the consuming action, but
+    # visible wherever the plan is executed.
     return out.observe(
         f"dup_groups_convergence_{next(_OBSERVE_SEQ)}",
         F.max(F.lit(1 if converged else 0)).alias("converged"),

@@ -682,273 +682,6 @@ def resolve_root(
     return reduce(DataFrame.unionByName, done).drop("_cursor")
 
 
-def _local_walk_frames(batches):
-    """Collect a partition's Arrow batches into one pandas frame.
-
-    The trace-local walk needs the WHOLE partition before it can resolve
-    anything (a trace's parent may arrive in a later batch than its child),
-    so memory is bounded by partition size — which, over the trace-bucketed
-    layout this API requires, is bucket size: the knob the table owner
-    sizes to executor memory at write time."""
-    import pandas as pd
-
-    parts = [pdf for pdf in batches if len(pdf)]
-    return pd.concat(parts, ignore_index=True) if parts else None
-
-
-def _canon_key(s):
-    """Canonical string rendering for combined trace\\x1fid keys. Arrow
-    hands a NULLABLE int64 column to pandas as float64, so the id column
-    (int64, "7") and the parent cursor (float64, "7.0") would otherwise
-    render DIFFERENT strings for the same id and every dup-keyed lookup
-    would silently miss (r12 review finding). Integral floats render as
-    ints; NaN renders as None so `.isin` misses cleanly."""
-    import pandas as pd
-
-    if s.dtype.kind == "f":
-        return s.map(
-            lambda v: None
-            if pd.isna(v)
-            else (str(int(v)) if float(v).is_integer() else repr(float(v)))
-        )
-    return s.astype(str)
-
-
-def _local_index(pdf, id_col: str, trace_col: str):
-    """(index, dup_keyed) for the partition-local parent index.
-
-    Fast path: spans indexed by id alone — C-speed int64/str hash maps —
-    with per-hop trace-consistency masking (a candidate ancestor stored
-    under a DIFFERENT trace is treated as a miss, exactly like the
-    (trace, span) join keys). If ids collide across traces inside the
-    partition (legal in principle, absent in Langfuse data), fall back to
-    a combined canonical trace\\x1fid key, which is slower but exact."""
-    import pandas as pd
-
-    idx = pd.Index(pdf[id_col])
-    if not idx.has_duplicates:
-        return idx, False
-    combined = _canon_key(pdf[trace_col]) + "\x1f" + _canon_key(pdf[id_col])
-    return pd.Index(combined), True
-
-
-def _guard_id_precision(pdf, id_col: str, parent_col: str) -> None:
-    """Integer ids above 2^53 cannot survive the float64 conversion Arrow
-    applies to the NULLABLE parent column — the precision is lost before
-    this code ever sees the values, so the walk would silently resolve
-    wrong roots. Fail loudly and point at the exact-path alternative
-    (r12 review finding)."""
-    ids = pdf[id_col]
-    if (
-        ids.dtype.kind in "iu"
-        and pdf[parent_col].dtype.kind == "f"
-        and len(ids)
-        # both tails: negative ids at/below -2^53 lose precision exactly
-        # like positive ones (r12 review finding)
-        and max(abs(int(ids.min())), abs(int(ids.max()))) >= 2**53
-    ):
-        raise ValueError(
-            f"trace-local walk: {id_col!r} holds integers >= 2^53, which "
-            "lose precision in the Arrow float64 conversion of the nullable "
-            f"{parent_col!r} column — use resolve_root/resolve_agent_name"
-            "(trace_col=) (JVM joins, exact at any id width) instead"
-        )
-
-
-def _dedup_index(series):
-    """Keep the LAST row per index key — matching the reference's
-    span_id→span dict build (convert_spans_to_chatcompletion.py:454-458:
-    a plain ``dict[span_id] = span`` loop, where a later duplicate
-    OVERWRITES an earlier one), deterministic under the bucketed layout's
-    sort. Without this, a genuinely duplicated (trace, span) row — routine
-    in append/retry ingest — makes Series.map raise InvalidIndexError and
-    kill the Arrow stage. Note the join-based resolvers instead FAN OUT
-    duplicates (one output row per duplicate pair); when duplicated rows
-    carry differing parent/name payloads the walk resolves through the
-    last occurrence, the joins through each (r12 review finding)."""
-    if series.index.has_duplicates:
-        return series[~series.index.duplicated(keep="last")]
-    return series
-
-
-def resolve_root_trace_local(
-    spans: DataFrame,
-    *,
-    id_col: str = "span_id",
-    parent_col: str = "parentObservationId",
-    max_hops: int = 6,
-    out_col: str = "root_id",
-    trace_col: str = "trace_id",
-    validate_trace: bool = True,
-    keep_cols: list[str] | None = None,
-) -> DataFrame:
-    """Zero-join root walk over the trace-co-located layout.
-
-    ``keep_cols``: project the output (and therefore the Arrow traffic in
-    BOTH directions) down to these columns + ``out_col``. The walk itself
-    only needs (trace, id, parent); every extra column is pure
-    serialization cost across the Python boundary — at spans ×100 the
-    4-column default pays ~35 % over a (span_id)-only projection.
-
-    PRECONDITION: ``spans`` must be read from a table bucketed on
-    ``trace_col`` (sources.bucketed.write_bucketed), so every trace lives
-    entirely inside one partition. Under that layout the whole multi-hop
-    walk runs as ONE Arrow stage — each partition builds the reference's
-    J1 span index (convert_spans_to_chatcompletion.py:454-458) as a local
-    pandas hash map and chases parent pointers vectorized per hop: no
-    joins, no exchanges, no broadcast, no sorts. This is the plan shape
-    the 2×ShuffledHashJoin trace-mode :func:`resolve_root` approximates;
-    here the per-hop probe is a C-speed ``Series.map`` instead of a JVM
-    hash join.
-
-    Semantics are identical to ``resolve_root(..., trace_col=)`` at the
-    same ``max_hops``: a dangling parent pointer stops the walk at the
-    last REAL ancestor; a candidate ancestor recorded under a different
-    trace id is a miss (trace-consistency mask); rows with a null parent
-    are their own root. Equality is pinned in
-    tests/test_skew_bucketing.py.
-    """
-    _require_colocatable(spans, trace_col, validate_trace)
-    from pyspark.sql import types as T
-
-    if keep_cols is not None:
-        needed = dict.fromkeys([trace_col, id_col, parent_col] + list(keep_cols))
-        spans = spans.select(*needed)
-        out_fields = [spans.schema[c] for c in keep_cols]
-    else:
-        out_fields = list(spans.schema.fields)
-    out_field = T.StructField(out_col, spans.schema[id_col].dataType)
-    schema = T.StructType(out_fields + [out_field])
-    emit_cols = [f.name for f in out_fields] + [out_col]
-
-    def walk(batches):
-        import numpy as np  # noqa: F401  (kept hot by daemon_preload)
-        import pandas as pd
-
-        pdf = _local_walk_frames(batches)
-        if pdf is None:
-            return
-        idx, dup_keyed = _local_index(pdf, id_col, trace_col)
-        par_s = _dedup_index(pd.Series(pdf[parent_col].to_numpy(), index=idx))
-        if dup_keyed:
-            key_of = lambda trace, ref: _canon_key(trace) + "\x1f" + _canon_key(ref)
-        else:
-            trace_s = _dedup_index(
-                pd.Series(pdf[trace_col].to_numpy(), index=idx)
-            )
-        lookup_idx = par_s.index
-        row_trace = pd.Series(pdf[trace_col].to_numpy())
-        row_trace_np = row_trace.to_numpy()
-        ids_np = pdf[id_col].to_numpy()
-        _guard_id_precision(pdf, id_col, parent_col)
-        root = ids_np
-        cur = pd.Series(pdf[parent_col].to_numpy())
-        for _ in range(max_hops):
-            if not cur.notna().any():
-                break
-            look = key_of(row_trace, cur) if dup_keyed else cur
-            look = look.where(cur.notna())
-            ok = look.isin(lookup_idx)
-            if not dup_keyed:
-                # ancestor must live in the SAME trace — == is NaN-safe
-                # (NaN == x is False), so misses and nulls drop out here
-                ok &= look.map(trace_s).to_numpy() == row_trace_np
-            ok_np = ok.to_numpy()
-            if not ok_np.any():
-                break
-            # raw np.where, not Series.where: the int64 root / float64
-            # cursor mix otherwise trips pandas' downcasting machinery
-            # (FutureWarning + a slow object-inference pass per hop)
-            root = np.where(ok_np, cur.to_numpy(), root)
-            cur = look.map(par_s).where(ok)
-        if root.dtype != ids_np.dtype:
-            # numeric path: the NaN-able cursor made root float64; the
-            # precision guard above proved every id round-trips exactly
-            root = root.astype(ids_np.dtype)
-        pdf[out_col] = root
-        yield pdf[emit_cols]
-
-    return spans.mapInPandas(walk, schema=schema)
-
-
-def resolve_agent_name_trace_local(
-    spans: DataFrame,
-    config_agents: list[str],
-    *,
-    max_hops: int = 6,
-    trace_col: str = "trace_id",
-    validate_trace: bool = True,
-) -> DataFrame:
-    """Zero-join agent-name resolution (J3, reference :460-509) over the
-    trace-co-located layout — the :func:`resolve_root_trace_local` of
-    :func:`resolve_agent_name`: one Arrow stage, a partition-local span
-    index, vectorized parent-chain chase. Same precondition (input read
-    from a table bucketed on ``trace_col``) and the same semantics as
-    ``resolve_agent_name(..., trace_col=)``: the agent is the first
-    ancestor whose stripped span_name matches a configured agent
-    case-insensitively, falling back to the immediate parent's stripped
-    name; misses and cross-trace ancestors stop the walk.
-
-    Probe == parent source by construction (the partition IS the span
-    file): callers that would pass a filtered probe + unfiltered
-    ``parent_source`` to the join-based resolver should instead resolve
-    over the FULL table and filter afterwards — the per-row walk is cheap,
-    and filtering after keeps this a single zero-shuffle stage.
-    """
-    _require_colocatable(spans, trace_col, validate_trace)
-    from pyspark.sql import types as T
-
-    agents_lc = [a.lower() for a in config_agents]
-    schema = T.StructType(
-        list(spans.schema.fields) + [T.StructField("agent_name", T.StringType())]
-    )
-
-    def walk(batches):
-        import pandas as pd
-
-        pdf = _local_walk_frames(batches)
-        if pdf is None:
-            return
-        idx, dup_keyed = _local_index(pdf, id_col="span_id", trace_col=trace_col)
-        par_s = _dedup_index(
-            pd.Series(pdf["parentObservationId"].to_numpy(), index=idx)
-        )
-        name_s = _dedup_index(pd.Series(pdf["span_name"].to_numpy(), index=idx))
-        if dup_keyed:
-            key_of = lambda trace, ref: _canon_key(trace) + "\x1f" + _canon_key(ref)
-        else:
-            trace_s = _dedup_index(
-                pd.Series(pdf[trace_col].to_numpy(), index=idx)
-            )
-        lookup_idx = par_s.index
-        _guard_id_precision(pdf, "span_id", "parentObservationId")
-        row_trace = pd.Series(pdf[trace_col].to_numpy())
-        cur = pd.Series(pdf["parentObservationId"].to_numpy())
-        agent = pd.Series([None] * len(pdf), dtype=object)
-        fallback = pd.Series([None] * len(pdf), dtype=object)
-        for hop in range(max_hops):
-            active = agent.isna() & cur.notna()
-            if not active.any():
-                break
-            look = key_of(row_trace, cur) if dup_keyed else cur
-            look = look.where(active)
-            ok = look.isin(lookup_idx)
-            if not dup_keyed:
-                ok &= look.map(trace_s).to_numpy() == row_trace.to_numpy()
-            nm = look.map(name_s).where(ok)
-            stripped = nm.str.replace(f"^{SUBAGENT_PREFIX}", "", regex=True)
-            matched = ok & stripped.str.lower().isin(agents_lc) & nm.notna()
-            agent = agent.where(~matched, stripped)
-            if hop == 0:
-                fallback = stripped  # stripped of a miss is NaN, like the chain
-            cur = look.map(par_s).where(ok & agent.isna())
-        out = agent.where(agent.notna(), fallback)
-        pdf["agent_name"] = out.where(out.notna(), None).to_numpy()
-        yield pdf
-
-    return spans.mapInPandas(walk, schema=schema)
-
-
 def agent_distribution(spans: DataFrame) -> DataFrame:
     """A2 (reference :1857-1877): agent_name → count."""
     return spans.groupBy("agent_name").agg(F.count("*").alias("n"))

@@ -408,18 +408,17 @@ def q58_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q63 — approximate quantiles (KLL/GK-style sketch via approx_percentile):
-# the 100 TB path for q49. Mergeable sketch state → one map-side-combinable
-# shuffle, no global sort.
+# q63 — discrete quantiles through approx_percentile's mergeable GK sketch:
+# one map-side-combinable shuffle, no per-group sort.
 #
-# Oracle note (hash exemption lifted): at the correctness gate's scale
-# (sf0.01, ~3 k rows per priority) accuracy=10000 puts the GK sketch in its
-# EXACT regime (rank error n/accuracy < 1), and Spark's percentile_approx
-# definition — smallest value with ≥ p·N values ≤ it — is DuckDB's
-# quantile_disc, so a value oracle is legitimate there (verified equal on
-# all 5×4 cells). At scale the sketch is approximate by design; its
-# error-bounded behavior vs the exact q49 is pinned in
-# tests/test_timeseries.py::test_q63_approx_quantiles_near_exact.
+# Exact at any SF below 2^30 rows per group: with accuracy = Int.MaxValue
+# the sketch's rank error n/accuracy stays under one rank, so it keeps
+# every sample and returns the exact rank — Spark's percentile_approx
+# definition (smallest value with ≥ p·N values ≤ it) is DuckDB's
+# quantile_disc, equal on all 5×4 cells at sf0.01 and sf0.1 (a smaller
+# accuracy such as 10000 diverges once a group outgrows it). percentile_disc
+# ... WITHIN GROUP gives the same values but sorts once per quantile (~5×
+# the time at sf0.1).
 # ---------------------------------------------------------------------------
 
 
@@ -438,7 +437,9 @@ def q58_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q63_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = t(spark, sf_dir, "orders")
     pct = F.percentile_approx(
-        "o_totalprice", F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75), F.lit(0.9)), 10000
+        "o_totalprice",
+        F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75), F.lit(0.9)),
+        2**31 - 1,
     )
     return orders.groupBy("o_orderpriority").agg(
         F.count("*").alias("n"),

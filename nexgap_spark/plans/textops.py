@@ -447,8 +447,10 @@ def q33_binary_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # q43 — near-duplicate GROUPS: connected components over the verified LSH
-# pair graph (hash-min label propagation; oracle = recursive CTE reachability).
-# The cluster-then-keep-one shape every large-scale dedup pipeline ends with.
+# pair graph (dedup.dup_groups: hash-min label propagation, one materialize
+# per round with its convergence count observed in the same action; oracle =
+# recursive CTE reachability). The cluster-then-keep-one shape every
+# large-scale dedup pipeline ends with.
 # ---------------------------------------------------------------------------
 
 

@@ -414,16 +414,6 @@ def bench_span_bucketed(spark, con, scaled_dir: str, trials: int = TRIALS) -> di
             max_hops=2, trace_col="trace_id" if trace else None,
         ).groupBy("root_id").agg(F.count("*").alias("tree_size"))
 
-    def q23_local(t):
-        # r12 third variant: the zero-JOIN trace-local Arrow walk — one
-        # mapInPandas stage builds each bucket's span index as a pandas
-        # hash map and chases parents vectorized (same matched max_hops)
-        return span_tree.resolve_root_trace_local(
-            t, id_col="span_id", parent_col="parentObservationId",
-            max_hops=2, trace_col="trace_id",
-            keep_cols=[],  # the agg needs root_id only — minimal Arrow I/O
-        ).groupBy("root_id").agg(F.count("*").alias("tree_size"))
-
     oracles = {
         "q22_bucketed_parent_join": """
             SELECT COALESCE(p.span_name, 'ROOT') AS parent_name, COUNT(*) AS n_children
@@ -465,22 +455,6 @@ def bench_span_bucketed(spark, con, scaled_dir: str, trials: int = TRIALS) -> di
             build(read_bucketed(spark, table), False).collect()
             dt = time.perf_counter() - t0
             b_best = dt if b_best is None else min(b_best, dt)
-        l_best = None
-        if name == "q23_bucketed_root_walk":
-            local_out = None
-            for _ in range(trials):
-                # timed window = len(collect()), EXACTLY like the other two
-                # variants — driver-side Row-attribute access and sorting
-                # stay OUTSIDE the timer (r12 review finding: they inflated
-                # the local-walk column in the side-by-side)
-                t0 = time.perf_counter()
-                local_out = q23_local(read_bucketed(spark, table)).collect()
-                len(local_out)
-                dt = time.perf_counter() - t0
-                l_best = dt if l_best is None else min(l_best, dt)
-            local_rows = sorted((r.root_id, r.tree_size) for r in local_out)
-            join_rows = sorted((r.root_id, r.tree_size) for r in df.collect())
-            assert local_rows == join_rows, "local walk diverged from join path"
         for _ in range(trials):
             dt = _duckdb_timed(con, oracles[name])
             if dt is None:
@@ -501,16 +475,10 @@ def bench_span_bucketed(spark, con, scaled_dir: str, trials: int = TRIALS) -> di
             # zero in the join/walk itself
             "exchanges": plan.count("Exchange hashpartitioning"),
         }
-        if l_best is not None:
-            out[name]["spark_local_walk_sec"] = round(l_best, 2)
-            if d_best is not None:
-                out[name]["local_walk_ratio"] = round(l_best / d_best, 3)
         d_str = f"{d_best:.2f}s" if d_best is not None else f"DNF>{DUCKDB_TIMEOUT_S:.0f}s"
         print(
             f"[scale_bench] {name}: colocated {s_best:.2f}s broadcast-path "
-            f"{b_best:.2f}s"
-            + (f" local-walk {l_best:.2f}s" if l_best is not None else "")
-            + f" duckdb {d_str} ({rows} rows, "
+            f"{b_best:.2f}s duckdb {d_str} ({rows} rows, "
             f"{out[name]['exchanges']} exchanges)",
             file=sys.stderr,
         )

@@ -46,3 +46,39 @@ def test_cli_convert_roundtrip(tmp_path):
     assert {r["span_id"] for r in records} == {"span_0003", "span_0011", "span_0030"}
     for rec in records:
         assert rec["messages"]
+
+
+def test_pandas_udf_from_foreign_cwd(tmp_path):
+    """A driver that finds the package only through sys.path — run from a
+    directory outside the checkout, with PYTHONPATH unset — must still get
+    Python workers that import the package (the preload daemon module and
+    the UDF body both need it)."""
+    import os
+    import pathlib
+
+    repo = str(pathlib.Path(__file__).resolve().parents[1])
+    script = tmp_path / "udf.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from pyspark.sql.functions import pandas_udf\n"
+        "from nexgap_spark.session import get_spark\n"
+        "spark = get_spark('foreign_cwd', cpus=2)\n"
+        "@pandas_udf('long')\n"
+        "def plus1(s):\n"
+        "    import nexgap_spark  # noqa: F401\n"
+        "    return s + 1\n"
+        "print(sorted(r[0] for r in spark.range(5).select(plus1('id')).collect()))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    r = subprocess.run(
+        [sys.executable, str(script)],
+        capture_output=True,
+        text=True,
+        cwd=str(tmp_path),
+        env=env,
+        timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert r.stdout.strip().splitlines()[-1] == "[1, 2, 3, 4, 5]"

@@ -375,6 +375,7 @@ def test_dup_groups_bucketed_edge_store(spark, monkeypatch):
     list from a bucketed-and-sorted table on m (no per-round edge exchange
     in the sort-merge regime) — identical groups to the checkpoint shape,
     and the per-call table/files are dropped when the loop returns."""
+    from nexgap_spark.operators import dedup
     from nexgap_spark.operators.dedup import dup_groups
 
     pairs = spark.createDataFrame(
@@ -387,7 +388,7 @@ def test_dup_groups_bucketed_edge_store(spark, monkeypatch):
 
     baseline = groups(dup_groups(pairs))
     before_tables = {t.name for t in spark.catalog.listTables()}
-    monkeypatch.setenv("NEXGAP_CC_BUCKET_MIN_EDGES", "1")
+    monkeypatch.setattr(dedup, "CC_BUCKET_MIN_EDGES", 1)
     bucketed = groups(dup_groups(pairs))
     assert bucketed == baseline
     # the per-call edge table was dropped on the way out
@@ -400,3 +401,26 @@ def test_dup_groups_bucketed_edge_store(spark, monkeypatch):
     )
     out = dup_groups(chain)
     assert {r.group_id for r in out.collect()} == {30}
+
+
+@pytest.mark.parametrize("schema", ["a long, b long", "a string, b string"])
+def test_dup_groups_job_budget_six_chain(spark, schema):
+    """Spark jobs of one dup_groups call plus its collect on a 6-chain
+    (7 rounds, the last one unchanged). Every round is one materialize
+    with the convergence count observed in it, so string ids cost the same
+    jobs as long ids; any extra per-round barrier shows up here."""
+    from nexgap_spark.operators.dedup import dup_groups
+
+    cast = str if schema.startswith("a string") else int
+    pairs = spark.createDataFrame(
+        [(cast(i), cast(i + 1)) for i in range(30, 36)], schema
+    )
+    sc = spark.sparkContext
+    group = f"dup_groups_budget_{cast.__name__}"
+    sc.setJobGroup(group, group)
+    try:
+        got = {r.group_id for r in dup_groups(pairs).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == {cast(30)}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 35

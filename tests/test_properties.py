@@ -22,7 +22,7 @@ import os
 import re
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from nexgap_spark.functions import validators as V
 from nexgap_spark.functions.xml_tools import (
@@ -131,6 +131,14 @@ def test_restore_idempotent_and_append_only(doc):
 
 @given(tag_soup)
 @settings(deadline=None)
+# the sub-agent regex swallows the stray </tool_use>, leaving the trailing
+# <tool_use> unclosed after the first pass
+@example(
+    doc="<sub-agent>\n<agent_name>helper</agent_name>\n<message>continue</message>\n"
+    "<history><![CDATA[user: hi\nassistant: hello]]></history>\n</sub-agent>\n"
+    "</tool_use>\nDelegating:\n<sub-agent>\n<agent_name>researcher</agent_name>\n"
+    "<message>Find recent OLAP papers</message>\n</sub-agent>\n<tool_use>"
+)
 def test_extraction_total_and_stable(doc):
     # total: never raises on arbitrary soup. Unparseable blocks are KEPT in
     # the cleaned content (reference behavior), so the invariant is

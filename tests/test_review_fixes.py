@@ -286,46 +286,6 @@ def test_canonical_url_key_based_tracking_match(spark):
     assert got[4] == "https://h.org/p?a=1"                   # utm_ family stripped
 
 
-def test_dup_groups_null_sum_fallback(spark, monkeypatch):
-    # ADVICE r6: a NULL decimal(38,0) label sum (overflow) must not fake
-    # convergence. Simulate by forcing the first two sums to None and
-    # checking the per-row fallback still converges to correct groups.
-    from nexgap_spark.operators import dedup
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "a long, b long"
-    )
-    # r17: the loop's sums are collected via observe() during the round's
-    # materialize action (Observation.get), not a separate .first() job —
-    # intercept the observation instead
-    import pyspark.sql.observation as _obsmod
-
-    calls = {"n": 0}
-    orig_get = _obsmod.Observation.get
-
-    def fake_get(self):
-        vals = orig_get.fget(self)
-        # intercept only the loop's 1-column sum observations; fake the
-        # first two as overflow NULLs
-        if list(vals.keys()) == ["s"]:
-            calls["n"] += 1
-            if calls["n"] <= 2:
-                return {"s": None}
-        return vals
-
-    monkeypatch.setattr(_obsmod.Observation, "get", property(fake_get))
-    out = {
-        r.n: r.group_id
-        for r in dedup.dup_groups(edges, a_col="a", b_col="b").collect()
-    }
-    assert calls["n"] >= 2  # the probe was actually exercised
-    # chain 1-2-3 collapses to min label 1; 10-11 to 10 — correct despite
-    # two simulated overflow rounds
-    assert out[1] == out[2] == out[3]
-    assert out[10] == out[11]
-    assert out[1] != out[10]
-
-
 # ---------------------------------------------------------------------------
 # Round-8 ADVICE regressions
 # ---------------------------------------------------------------------------

@@ -334,44 +334,9 @@ def test_trace_colocated_survives_mega_trace_skew(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS spans_mega_trace")
 
 
-def test_trace_local_root_walk_zero_join(spark, tmp_path):
-    """r12: the zero-JOIN walk — one Arrow stage over the bucketed layout,
-    no joins/exchanges/broadcasts in the executed plan, results identical
-    to both the broadcast path and the bucket-local join path."""
-    from nexgap_spark.operators import span_tree
-
-    spans = _derived_span_frame(spark)
-    write_bucketed(
-        spans, "spans_local_rr", str(tmp_path / "spans_lrr"),
-        bucket_cols=["trace_id"], buckets=8, sort_cols=["trace_id", "span_id"],
-    )
-    try:
-        t = read_bucketed(spark, "spans_local_rr")
-        resolved = span_tree.resolve_root_trace_local(
-            t, id_col="span_id", parent_col="parentObservationId",
-            max_hops=3, trace_col="trace_id",
-        )
-        plan = resolved._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert "Join" not in plan, plan
-        assert "Broadcast" not in plan, plan
-        got = sorted((r.span_id, r.root_id) for r in resolved.collect())
-    finally:
-        spark.sql("DROP TABLE IF EXISTS spans_local_rr")
-    want = sorted(
-        (r.span_id, r.root_id)
-        for r in span_tree.resolve_root(
-            spans, id_col="span_id", parent_col="parentObservationId", max_hops=3
-        ).collect()
-    )
-    assert got == want
-    assert all(root % 100 == 0 for _, root in got)
-
-
-def test_trace_local_root_walk_dangling_parent(spark):
-    """A dangling parent pointer must stop the walk at the last REAL
-    ancestor — the one-join shortcut is provably incorrect here, and the
-    local walk must match the join-based semantics exactly."""
+def test_trace_mode_dangling_parent_stops_at_last_real_ancestor(spark):
+    """A dangling parent pointer stops the walk at the last REAL ancestor,
+    in trace-co-located mode exactly as in the broadcast mode."""
     from nexgap_spark.operators import span_tree
 
     spans = spark.createDataFrame(
@@ -385,7 +350,7 @@ def test_trace_local_root_walk_dangling_parent(spark):
     ).repartition(2, "trace_id")
     got = {
         r.span_id: r.root_id
-        for r in span_tree.resolve_root_trace_local(
+        for r in span_tree.resolve_root(
             spans, max_hops=4, trace_col="trace_id"
         ).collect()
     }
@@ -396,9 +361,10 @@ def test_trace_local_root_walk_dangling_parent(spark):
     assert got == want == {1: 1, 2: 1, 3: 3, 4: 3}
 
 
-def test_trace_local_cross_trace_parent_is_miss(spark):
-    """An ancestor recorded under a DIFFERENT trace is a miss (same as the
-    (trace, span) join keys), even though the id exists in the partition."""
+def test_trace_mode_cross_trace_parent_is_miss(spark):
+    """In trace-co-located mode an ancestor recorded under a DIFFERENT
+    trace is a miss (the join keys are (trace, span)), even though the id
+    exists in the frame."""
     from nexgap_spark.operators import span_tree
 
     spans = spark.createDataFrame(
@@ -410,194 +376,16 @@ def test_trace_local_cross_trace_parent_is_miss(spark):
     ).coalesce(1)
     got = {
         r.span_id: r.root_id
-        for r in span_tree.resolve_root_trace_local(
-            spans, trace_col="trace_id"
-        ).collect()
+        for r in span_tree.resolve_root(spans, trace_col="trace_id").collect()
     }
     assert got == {"s1": "s1", "s2": "s2"}
     agents = {
         r.span_id: r.agent_name
-        for r in span_tree.resolve_agent_name_trace_local(
+        for r in span_tree.resolve_agent_name(
             spans, ["root-a"], trace_col="trace_id"
         ).collect()
     }
     assert agents["s2"] is None  # cross-trace parent never resolves
-
-
-def test_trace_local_agent_name_equals_broadcast(spark):
-    """Langfuse-shaped fixture (string ids, Sub-agent prefixes, config
-    match + fallback): the local walk must equal the broadcast resolver."""
-    from nexgap_spark.operators import span_tree
-    from nexgap_spark.schemas import SPAN_SCHEMA
-    from tests.fixtures_spans import CONFIG_AGENTS, build_spans
-
-    rows = []
-    for s in build_spans():
-        s = dict(s)
-        if isinstance(s["output"], dict):
-            s["output"] = [s["output"]]
-        rows.append(s)
-    spans = spark.createDataFrame(rows, schema=SPAN_SCHEMA).repartition(
-        4, "trace_id"
-    )
-    want = sorted(
-        (r.span_id, r.agent_name)
-        for r in span_tree.resolve_agent_name(spans, CONFIG_AGENTS).collect()
-    )
-    got = sorted(
-        (r.span_id, r.agent_name)
-        for r in span_tree.resolve_agent_name_trace_local(
-            spans, CONFIG_AGENTS, trace_col="trace_id"
-        ).collect()
-    )
-    assert got == want
-
-
-def test_trace_local_mega_trace_skew(spark, tmp_path):
-    """Degenerate skew: one deep 50k-span chain in a single trace. The
-    local walk is bounded by max_hops exactly like the join paths, and the
-    hot bucket resolves correctly."""
-    from nexgap_spark.operators import span_tree
-
-    n_hot = 20_000
-    hot = spark.range(n_hot).select(
-        F.col("id").alias("span_id"),
-        F.when(F.col("id") == 0, F.lit(None).cast("long"))
-        .otherwise(F.col("id") - 1).alias("parentObservationId"),
-        F.lit("hot").alias("span_name"),
-        F.lit(0).cast("long").alias("trace_id"),
-    )
-    write_bucketed(
-        hot, "spans_local_mega", str(tmp_path / "lmega"),
-        bucket_cols=["trace_id"], buckets=4, sort_cols=["trace_id", "span_id"],
-    )
-    try:
-        t = read_bucketed(spark, "spans_local_mega")
-        got = {
-            r.span_id: r.root_id
-            for r in span_tree.resolve_root_trace_local(
-                t, max_hops=3, trace_col="trace_id"
-            ).collect()
-        }
-    finally:
-        spark.sql("DROP TABLE IF EXISTS spans_local_mega")
-    # span k walks exactly min(k, 3) hops up the chain
-    assert got[0] == 0 and got[1] == 0 and got[2] == 0 and got[3] == 0
-    assert got[10] == 7 and got[n_hot - 1] == n_hot - 4
-
-
-def test_trace_local_dup_keyed_numeric_ids(spark):
-    """r12 review: numeric ids colliding ACROSS traces trigger the
-    combined-key fallback, where the float64 parent cursor ('7.0') and the
-    int64 id column ('7') must render IDENTICAL canonical keys — the naive
-    astype(str) silently missed every lookup."""
-    from nexgap_spark.operators import span_tree
-
-    spans = spark.createDataFrame(
-        [
-            (10, 1, None, "root-a"),
-            (10, 2, 1, "child-a"),
-            (20, 1, None, "root-b"),   # same span_id=1 under another trace
-            (20, 2, 1, "child-b"),     # and same child id too
-        ],
-        "trace_id long, span_id long, parentObservationId long, span_name string",
-    ).coalesce(1)
-    got = sorted(
-        (r.trace_id, r.span_id, r.root_id)
-        for r in span_tree.resolve_root_trace_local(
-            spans, trace_col="trace_id"
-        ).collect()
-    )
-    assert got == [(10, 1, 1), (10, 2, 1), (20, 1, 1), (20, 2, 1)]
-    agents = {
-        (r.trace_id, r.span_id): r.agent_name
-        for r in span_tree.resolve_agent_name_trace_local(
-            spans, ["root-a", "root-b"], trace_col="trace_id"
-        ).collect()
-    }
-    assert agents[(10, 2)] == "root-a" and agents[(20, 2)] == "root-b"
-
-
-def test_trace_local_duplicated_rows_survive(spark):
-    """r12 review: a genuinely duplicated (trace, span) row — routine in
-    append/retry ingest — must resolve dict-style (LAST occurrence wins,
-    matching the reference's dict[span_id]=span build), not raise
-    InvalidIndexError and kill the Arrow stage."""
-    from nexgap_spark.operators import span_tree
-
-    spans = spark.createDataFrame(
-        [
-            ("t1", "s1", None, "root"),
-            ("t1", "s2", "s1", "child"),
-            ("t1", "s2", "s1", "child"),  # exact duplicate row
-        ],
-        "trace_id string, span_id string, parentObservationId string, span_name string",
-    ).coalesce(1)
-    out = span_tree.resolve_root_trace_local(spans, trace_col="trace_id").collect()
-    assert {(r.span_id, r.root_id) for r in out} == {("s1", "s1"), ("s2", "s1")}
-    assert len(out) == 3  # duplicates pass through, each resolved
-    agents = span_tree.resolve_agent_name_trace_local(
-        spans, ["root"], trace_col="trace_id"
-    ).collect()
-    assert all(r.agent_name == "root" for r in agents if r.span_id == "s2")
-
-
-def test_trace_local_duplicate_payloads_last_wins(spark):
-    """r12 advice: when duplicated (trace, span) rows carry DIFFERING
-    parent payloads, the walk must pick the LAST occurrence — the same row
-    the reference's dict build (convert_spans_to_chatcompletion.py:454-458)
-    ends up holding after its overwrite loop."""
-    from nexgap_spark.operators import span_tree
-
-    spans = spark.createDataFrame(
-        [
-            ("t1", "a", None, "root-a"),
-            ("t1", "b", None, "root-b"),
-            ("t1", "c", "a", "child"),  # earlier duplicate: parent a
-            ("t1", "c", "b", "child"),  # later duplicate: parent b — wins
-        ],
-        "trace_id string, span_id string, parentObservationId string, span_name string",
-    ).coalesce(1)
-    roots = {
-        r.span_id: r.root_id
-        for r in span_tree.resolve_root_trace_local(
-            spans, trace_col="trace_id"
-        ).collect()
-    }
-    assert roots["c"] == "b"
-
-
-def test_trace_local_huge_negative_int_ids_raise(spark):
-    """r12 advice: negative ids at or below -2^53 lose float64 precision
-    exactly like positive ones — the guard must check both tails."""
-    from nexgap_spark.operators import span_tree
-
-    big = -(2**53) - 10
-    spans = spark.createDataFrame(
-        [("t1", big, None), ("t1", big - 1, big)],
-        "trace_id string, span_id long, parentObservationId long",
-    ).coalesce(1)
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="2\\^53"):
-        span_tree.resolve_root_trace_local(spans, trace_col="trace_id").collect()
-
-
-def test_trace_local_huge_int_ids_raise(spark):
-    """r12 review: int64 ids >= 2^53 lose precision in Arrow's float64
-    conversion of the nullable parent column — must fail loudly, not
-    resolve silently-wrong roots."""
-    from nexgap_spark.operators import span_tree
-
-    big = 2**53 + 10
-    spans = spark.createDataFrame(
-        [("t1", big, None), ("t1", big + 1, big)],
-        "trace_id string, span_id long, parentObservationId long",
-    ).coalesce(1)
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="2\\^53"):
-        span_tree.resolve_root_trace_local(spans, trace_col="trace_id").collect()
 
 
 def test_skew_artifact_green():

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from nexgap_spark.operators.curation import pack_chunks
@@ -187,12 +187,20 @@ def test_range_join_matches_bruteforce(spark, case):
         ),
         min_size=1,
         max_size=40,
-    )
+    ),
+    st.booleans(),
 )
-def test_dup_groups_matches_bruteforce_components(spark, edges):
+# no pairs at all; a string-id chain needing many rounds ("10" < "2": the
+# string order is not the integer order, so the labels walk a different path)
+@example(edges=[], as_str=False)
+@example(edges=[(i, i + 1) for i in range(12)], as_str=True)
+def test_dup_groups_matches_bruteforce_components(spark, edges, as_str):
     from nexgap_spark.operators.dedup import dup_groups
 
-    pairs = spark.createDataFrame(edges, "a long, b long")
+    if as_str:
+        edges = [(str(a), str(b)) for a, b in edges]
+    schema = "a string, b string" if as_str else "a long, b long"
+    pairs = spark.createDataFrame(edges, schema)
     got = {r.n: r.group_id for r in dup_groups(pairs).collect()}
     # brute-force union-find: group id = min node id of the component
     parent: dict[int, int] = {}
