@@ -18,7 +18,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nexgap_spark.operators.text import tokenize
-from nexgap_spark.session import MaterializeGen, fan_out_python_stage, materialize
+from nexgap_spark.session import (
+    MaterializeGen,
+    _plan_stats_bytes,
+    fan_out_python_stage,
+    materialize,
+)
 
 # Fixed affine hash parameters (a, b) for MinHash — odd multipliers, distinct
 # offsets; p is the smallest prime above 2^32 so (a*h+b) % p stays in int64.
@@ -28,7 +33,6 @@ from nexgap_spark.session import MaterializeGen, fan_out_python_stage, materiali
 # (composing their frames into one plan would fail analysis).
 import itertools
 import logging
-import os
 
 _OBSERVE_SEQ = itertools.count(1)
 _LOG = logging.getLogger(__name__)
@@ -198,13 +202,8 @@ def shingle_table(
     return out.distinct()
 
 
-def plan_size_bytes(df: DataFrame) -> int:
-    """Optimizer size estimate of ``df``'s plan — for a parquet scan this
-    is the on-disk file bytes (× ``fileCompressionFactor``), computed from
-    metadata with no job. Estimates for derived plans inherit the scan's
-    figure, so upstream-of-filter frames stay honest; RDD-backed lineages
-    (localCheckpoint) report the conservative default (huge)."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+# Input size above which shared_shingles materializes its table (see there).
+SHINGLE_MAT_MIN_BYTES = 1024 * 1024
 
 
 def shared_shingles(
@@ -213,7 +212,6 @@ def shared_shingles(
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int = 3,
-    min_bytes: int | None = None,
     size_of: DataFrame | None = None,
 ) -> DataFrame:
     """Distinct shingle table for MULTI-CONSUMER lineages (signature path +
@@ -232,22 +230,17 @@ def shared_shingles(
     input, materialize LOSES ~20-25% on q31/q43/q118 (r17 box); ×3 ≈
     2.0 MB, materialize WINS 20-30% (r18 box, bench_r18 sweep); sf1.0 ≈
     6.6 MB, materialize WINS 30-40% (r17 box). The crossover therefore
-    sits between 0.6 and 2.0 MB; the default threshold is their geometric
+    sits between 0.6 and 2.0 MB; the threshold is their geometric
     midpoint ≈ 1 MB (r18 — the old 4 MB two-point default was ~2-4×
-    conservative), and any production corpus is far above it either way.
-    Override via ``NEXGAP_SHINGLE_MAT_MIN_BYTES`` (or ``min_bytes``).
+    conservative), and any production corpus is far above it either way:
+    ``SHINGLE_MAT_MIN_BYTES``, compared with the optimizer's size estimate
+    (on-disk bytes for a parquet scan, no job).
 
     ``size_of``: optional frame whose plan estimate stands in for ``df``'s
     when ``df`` is checkpoint-backed (RDD lineages report the conservative
     huge default) — callers pass the upstream scan the frame derives from,
     which errs toward the at-scale shape since derived rows ≤ input."""
-    if min_bytes is None:
-        import os
-
-        min_bytes = int(
-            os.environ.get("NEXGAP_SHINGLE_MAT_MIN_BYTES", str(1024 * 1024))
-        )
-    if plan_size_bytes(size_of if size_of is not None else df) < min_bytes:
+    if _plan_stats_bytes(size_of if size_of is not None else df) < SHINGLE_MAT_MIN_BYTES:
         return shingle_table(
             df, id_col=id_col, text_col=text_col, shingle_n=shingle_n
         )

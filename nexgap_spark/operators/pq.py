@@ -43,17 +43,21 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from nexgap_spark.session import fan_out_python_stage
 from nexgap_spark.operators.similarity import (
     DEFAULT_DIM,
+    _collect_centroids,
     _collect_small_side,
+    _group_queries,
+    _id_type,
+    _key,
+    _merge_topk,
     _np_assign,
-    _np_assign_topm,
+    _probed,
     _seq_score_block,
     _seq_sqrt_norms,
+    _topk_partials,
     load_ivf_index,
 )
 
@@ -67,7 +71,7 @@ def _seq_sqdist_block(xm: np.ndarray, cm: np.ndarray) -> np.ndarray:
     encode-side twin of `_seq_score_block`: additions run left-to-right
     over dimensions so per-pair distances are bit-identical to the DuckDB
     ordered list fold the q122 oracle replays (same in-place buffer
-    discipline; see _seq_score_block's r16 note)."""
+    discipline; see _seq_score_block)."""
     d = xm[:, 0][:, None] - cm[:, 0][None, :]
     acc = d * d
     tmp = np.empty_like(acc)
@@ -284,9 +288,7 @@ def pq_encode_stage(
     cb, residual = _collect_codebook(codebooks)
     m, _, sub = cb.shape
     dim = m * sub
-    sc = df.sparkSession.sparkContext
-    b = sc.broadcast(cb)
-    bc = None
+    cmap = None
     if residual:
         if centroids is None or "centroid_id" not in df.columns:
             raise ValueError(
@@ -299,19 +301,15 @@ def pq_encode_stage(
             [F.col("centroid_id").alias("_c_id"), F.col(vec_col).alias("_c_vec")],
             "centroid side",
         )
-        bc = sc.broadcast(
-            {
-                cid: np.asarray(vec, dtype=np.float64)
-                for cid, vec in zip(cent_pd["_c_id"], cent_pd["_c_vec"])
-            }
-        )
+        cmap = {
+            cid: np.asarray(vec, dtype=np.float64)
+            for cid, vec in zip(cent_pd["_c_id"], cent_pd["_c_vec"])
+        }
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     ) + f", {out_col} binary"
 
     def run(batches):
-        cbm = b.value
-        cmap = bc.value if bc is not None else None
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -345,7 +343,7 @@ def pq_encode_stage(
                 x = x - np.stack([cmap[c] for c in cids])
             codes = np.empty((len(x), m), dtype=np.uint8)
             for j in range(m):
-                d2 = _seq_sqdist_block(x[:, j * sub : (j + 1) * sub], cbm[j])
+                d2 = _seq_sqdist_block(x[:, j * sub : (j + 1) * sub], cb[j])
                 # first-minimum argmin = lowest code on exact float ties
                 codes[:, j] = np.argmin(d2, axis=1).astype(np.uint8)
             pdf = pdf.copy()
@@ -403,99 +401,37 @@ def ivf_topk_indexed_pq(
             "index has no PQ codes; build with build_ivf_index(..., "
             "pq_codebooks=...)"
         )
-    root = index_path.rstrip("/")
-    cb_df = spark.read.parquet(f"{root}/pq_codebooks")
-    cb, residual = _collect_codebook(cb_df)
-    m = cb.shape[0]
-    cent_pd = _collect_small_side(
-        centroids, [F.col("centroid_id"), F.col(vec_col)], "centroid side"
+    cb, residual = _collect_codebook(
+        spark.read.parquet(f"{index_path.rstrip('/')}/pq_codebooks")
     )
-    cent_ids = cent_pd["centroid_id"].to_numpy()
-    cent_mat = np.stack(cent_pd[vec_col].to_numpy()).astype(np.float64)
-    q_pd = _collect_small_side(queries, [F.col(id_col), F.col(vec_col)], "query side")
-    q_ids = q_pd[id_col].to_numpy()
-    q_mat = np.stack(q_pd[vec_col].to_numpy()).astype(np.float64)
-    q_probes = _np_assign_topm(q_mat, cent_ids, cent_mat, max(1, nprobe))
-    q_norms = _seq_sqrt_norms(q_mat)
-
-    members: dict = {}
-    for qi, probed in enumerate(q_probes):
-        for c in probed:
-            key = c.item() if hasattr(c, "item") else c
-            members.setdefault(key, []).append(qi)
-    q_by_cent = {
-        c: (q_ids[idx], q_mat[idx], q_norms[idx])
-        for c, idx in ((c, np.array(v)) for c, v in members.items())
-    }
-    probed_ids = sorted(q_by_cent)
-    sc = spark.sparkContext
-    bq = sc.broadcast(q_by_cent)
-    bcb = sc.broadcast(cb)
+    m, _, sub = cb.shape
+    route = _collect_centroids(
+        centroids, centroid_id_col="centroid_id", vec_col=vec_col, dim=m * sub
+    )
+    q_by_cent = _group_queries(
+        queries, id_col=id_col, vec_col=vec_col, dim=m * sub, route=route, nprobe=nprobe
+    )
     # residual indexes reconstruct candidate ≈ centroid + r̂ — the probe
     # adds the (already-collected) centroid vector back per group
-    cent_map = (
-        {
-            cid.item() if hasattr(cid, "item") else cid: cent_mat[i]
-            for i, cid in enumerate(cent_ids)
-        }
-        if residual
-        else None
-    )
-    bcm = sc.broadcast(cent_map)
+    cent_map = dict(zip(map(_key, route[0]), route[1])) if residual else None
+
+    def score_pq(cent, grp, qm, qn):
+        recon = _reconstruct(_decode_codes(grp["pqcodes"], m), cb)
+        if cent_map is not None:
+            recon = recon + cent_map[cent][None, :]
+        rl2 = _seq_sqrt_norms(recon)
+        return _seq_score_block(qm, recon) / (
+            qn[:, None] * np.where(rl2 == 0.0, np.inf, rl2)[None, :]
+        )
 
     # ---- PQ candidate scan: float/int8 columns NEVER read -----------------
-    pruned = corpus.filter(F.col("centroid_id").isin(probed_ids)).select(
-        id_col, "centroid_id", "pqcodes"
+    partials = _topk_partials(
+        _probed(corpus, q_by_cent).select(id_col, "centroid_id", "pqcodes"),
+        q_by_cent,
+        score_pq,
+        k=k,
+        id_col=id_col,
+        q_id_type=_id_type(queries, id_col),
+        col="acos",
     )
-
-    def search_pq(batches):
-        q_by = bq.value
-        cbm = bcb.value
-        cmap = bcm.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows_q, rows_n, rows_c = [], [], []
-            for cent, grp in pdf.groupby("centroid_id"):
-                key = cent.item() if hasattr(cent, "item") else cent
-                qc = q_by.get(key)
-                if qc is None:
-                    continue
-                sub_q_ids, sub_qm, sub_qn = qc
-                recon = _reconstruct(_decode_codes(grp["pqcodes"], m), cbm)
-                if cmap is not None:
-                    recon = recon + cmap[key][None, :]
-                rl2 = _seq_sqrt_norms(recon)
-                sub_nids = grp[id_col].to_numpy()
-                dots = _seq_score_block(sub_qm, recon)
-                denom = sub_qn[:, None] * np.where(rl2 == 0.0, np.inf, rl2)[None, :]
-                cos = dots / denom
-                for qi in range(len(sub_q_ids)):
-                    row = cos[qi]
-                    mask = sub_nids == sub_q_ids[qi]
-                    if mask.any():
-                        row = row.copy()
-                        row[mask] = -np.inf
-                    order = np.lexsort((sub_nids, -row))[:k]
-                    keep = order[np.isfinite(row[order])]
-                    rows_q.extend([sub_q_ids[qi]] * len(keep))
-                    rows_n.extend(sub_nids[keep])
-                    rows_c.extend(row[keep])
-            yield pd.DataFrame({"q_id": rows_q, "n_id": rows_n, "acos": rows_c})
-
-    q_id_type = queries.schema[id_col].dataType.simpleString()
-    n_id_type = corpus.schema[id_col].dataType.simpleString()
-    partials = fan_out_python_stage(pruned).mapInPandas(
-        search_pq, schema=f"q_id {q_id_type}, n_id {n_id_type}, acos double"
-    )
-    wq = W.partitionBy("q_id").orderBy(F.col("acos").desc(), F.col("n_id"))
-    return (
-        partials.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= k)
-        .select(
-            F.col("q_id"),
-            F.col("n_id"),
-            F.round("acos", 6).alias("cos"),
-            F.col("_rn").alias("rank"),
-        )
-    )
+    return _merge_topk(partials, k, col="acos", rank="rank", rounded=True)

@@ -2,12 +2,14 @@
 the exact baseline, IVF (coarse-quantizer cluster routing) as the scale path,
 and blocked near-duplicate detection.
 
-Dot products are flat codegen'd expression chains with strict left-to-right
-addition (bit-stable, engine-comparable — see `dot`); norms are precomputed
-per vector before any pair join; scan sides are repartitioned so single-file
-parquet inputs don't serialize the pairwise stages. No Python in the loop;
-the quadratic stages are explicitly bounded (query subset × corpus, or
-within-cluster only).
+Two pieces are shared by every vector operator here and in operators/pq.py:
+the centroid router (`assign_clusters` and the per-batch `_route` behind
+it) and the top-k skeleton (`_group_queries` → `_topk_partials` →
+`_merge_topk`). Every score comes from the sequential-fold helpers
+(`_seq_score_block`, `_seq_sqrt_norms`, or the flat `dot` chain on the
+SQL side), so cosines are bit-identical to the DuckDB oracle's ordered
+fold. The quadratic stages are explicitly bounded (query subset × corpus,
+or within-cluster only).
 """
 
 from __future__ import annotations
@@ -61,216 +63,12 @@ def dot(a: Column, b: Column, dim: int = DEFAULT_DIM) -> Column:
     return out
 
 
-def dot_any_dim(a: Column, b: Column) -> Column:
-    """Dimension-agnostic fallback (interpreted HOF fold) for vectors whose
-    length isn't statically known. Same value, ~100× slower per pair."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def norm(a: Column, dim: int = DEFAULT_DIM) -> Column:
     return F.sqrt(dot(a, a, dim))
 
 
 def cosine(a: Column, b: Column, dim: int = DEFAULT_DIM) -> Column:
     return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
-
-
-def brute_force_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    dim: int = DEFAULT_DIM,
-) -> DataFrame:
-    """Exact top-k neighbors per query by cosine.
-
-    Distributed design: the query matrix is collected (small side by
-    contract) and broadcast as a dense float64 block; the corpus streams
-    partition-parallel through a vectorized Arrow stage that computes the
-    |Q|×batch score block and keeps only a per-partition partial top-k per
-    query; a final window merges the partials. Shuffle volume is
-    O(|Q| · k · partitions), never O(|Q|·|C|).
-
-    Float discipline: the score block accumulates SEQUENTIALLY over
-    dimensions (one vectorized add per dim), so every cosine is bit-identical
-    to the ordered left-to-right fold the DuckDB oracle computes — numpy's
-    pairwise-summing dot() would not be.
-    """
-    q_pd = _collect_small_side(queries, [F.col(id_col), F.col(vec_col)], "query side")
-    q_ids_arr = q_pd[id_col].to_numpy()
-    q_mat = np.stack(q_pd[vec_col].to_numpy()).astype(np.float64)
-
-    # shared bit-stability helpers (one definition of the sequential fold —
-    # an inline copy here would silently drift from the oracle contract if
-    # the float discipline is ever tweaked)
-    q_norms = _seq_sqrt_norms(q_mat)
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((q_ids_arr, q_mat, q_norms))
-
-    def score(batches):
-        q_ids, qm, qn = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n_ids = pdf[id_col].to_numpy()
-            cos = _seq_score_block(qm, cm) / (qn[:, None] * _seq_sqrt_norms(cm)[None, :])
-            rows_q, rows_n, rows_c = [], [], []
-            for qi in range(len(q_ids)):
-                row = cos[qi]
-                mask = n_ids == q_ids[qi]  # exclude self before the cut
-                if mask.any():
-                    row = row.copy()
-                    row[mask] = -np.inf
-                order = np.lexsort((n_ids, -row))[:k]
-                keep = order[np.isfinite(row[order])]
-                rows_q.extend([q_ids[qi]] * len(keep))
-                rows_n.extend(n_ids[keep])
-                rows_c.extend(row[keep])
-            yield pd.DataFrame({"q_id": rows_q, "n_id": rows_n, "cos": rows_c})
-
-    # derive id field types from the actual schemas (same pattern as
-    # ivf_topk_indexed): hard-coding long would coerce/fail string or int
-    # ids that id_col= legitimately allows
-    q_id_type = queries.schema[id_col].dataType.simpleString()
-    n_id_type = corpus.schema[id_col].dataType.simpleString()
-    partials = fan_out_python_stage(corpus).mapInPandas(
-        score, schema=f"q_id {q_id_type}, n_id {n_id_type}, cos double"
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (
-        partials.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cos", "rk")
-    )
-
-
-def assign_clusters(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id_col: str = "centroid_id",
-    dim: int = DEFAULT_DIM,
-    engine: str = "sql",
-) -> DataFrame:
-    """IVF coarse quantization: route each vector to its nearest centroid
-    (max cosine; deterministic tiebreak on centroid id). Centroids broadcast;
-    one pass over the corpus.
-
-    Plan shape (``engine="sql"``): argmax-per-vector is a ``max_by``
-    AGGREGATE, not a row_number window — the broadcast join keeps a
-    vector's k centroid rows on their map partition, so the partial
-    aggregate collapses them to ONE row per vector before the exchange.
-    The window alternative shuffles |V|·k rows each carrying two embedding
-    arrays; this shuffles |V| rows carrying one payload struct.
-
-    ``engine="arrow"`` routes through the shared ``_np_assign`` kernel
-    (mapInPandas, centroids broadcast as a matrix) — bit-identical cosines
-    via the sequential fold, same lowest-id tiebreak, same output columns.
-    The SQL plan evaluates |V|·K codegen'd dot chains element-at-a-time,
-    which is fine at the q35/q80 K≈16 scale but dominates at K≈√N index
-    builds (measured: K=448 on 200k×64f — 305 s SQL vs ~6 s Arrow);
-    build_ivf_index therefore defaults to the Arrow engine. Embeddings
-    must be non-null under the Arrow engine (np.stack rejects None rows
-    loudly); the SQL engine tolerates them with NULL similarity."""
-    if engine not in ("sql", "arrow"):
-        # a typo must not silently select the 50x-slower SQL path with
-        # different null handling (r14 review)
-        raise ValueError(f"engine must be 'sql' or 'arrow', got {engine!r}")
-    if engine == "arrow":
-        return _assign_clusters_arrow(
-            vectors,
-            centroids,
-            id_col=id_col,
-            vec_col=vec_col,
-            centroid_id_col=centroid_id_col,
-        )
-    cent = F.broadcast(
-        centroids.select(
-            F.col(centroid_id_col).alias("_c_id"),
-            F.col(vec_col).alias("_c_vec"),
-            norm(F.col(vec_col), dim).alias("_c_norm"),
-        )
-    )
-    scored = (
-        fan_out_python_stage(vectors)
-        .withColumn("_v_norm", norm(F.col(vec_col), dim))
-        .join(cent)
-        .withColumn(
-            "_sim",
-            dot(F.col(vec_col), F.col("_c_vec"), dim) / (F.col("_v_norm") * F.col("_c_norm")),
-        )
-    )
-    payload_cols = [c for c in vectors.columns if c != id_col]
-    best = scored.groupBy(id_col).agg(
-        F.min_by(
-            F.struct(*[F.col(c) for c in payload_cols], F.col("_c_id")),
-            # min over (-sim, id) = max similarity, then LOWEST centroid id
-            # on ties. The negation goes on _sim (always double) rather than
-            # the id: negating the id breaks non-numeric centroid ids
-            # (analysis error under ANSI, NULL tiebreak otherwise).
-            F.struct((-F.col("_sim")).alias("_neg_sim"), F.col("_c_id")),
-        ).alias("_best")
-    )
-    return best.select(
-        id_col,
-        *[F.col(f"_best.{c}").alias(c) for c in payload_cols],
-        F.col("_best._c_id").alias(centroid_id_col),
-    )
-
-
-def _assign_clusters_arrow(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    centroid_id_col: str,
-) -> DataFrame:
-    """Arrow twin of the SQL assign plan: same `_np_assign` kernel as
-    ivf_topk/kmeans (sequential-fold cosines, lowest-id tiebreak), output
-    columns identical to the SQL path ([id, payload..., centroid_id])."""
-    from pyspark.sql.types import StructField, StructType
-
-    cent_pd = _collect_small_side(
-        centroids,
-        [F.col(centroid_id_col).alias("_c_id"), F.col(vec_col).alias("_c_vec")],
-        "centroid side",
-    )
-    cent_ids = cent_pd["_c_id"].to_numpy()
-    cent_mat = np.stack(cent_pd["_c_vec"].to_numpy()).astype(np.float64)
-    sc = vectors.sparkSession.sparkContext
-    b = sc.broadcast((cent_ids, cent_mat))
-    payload_cols = [c for c in vectors.columns if c != id_col]
-    in_fields = {f.name: f for f in vectors.schema.fields}
-    cent_id_type = centroids.schema[centroid_id_col].dataType
-    out_schema = StructType(
-        [in_fields[id_col]]
-        + [in_fields[c] for c in payload_cols]
-        + [StructField(centroid_id_col, cent_id_type)]
-    )
-    out_cols = [id_col] + payload_cols + [centroid_id_col]
-
-    def fn(batches):
-        c_ids, c_mat = b.value
-        for pdf in batches:
-            pdf = pdf.copy()
-            if len(pdf):
-                m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                pdf[centroid_id_col] = _np_assign(m, c_ids, c_mat)
-            else:
-                pdf[centroid_id_col] = pd.Series([], dtype=object)
-            yield pdf[out_cols]
-
-    return fan_out_python_stage(vectors).mapInPandas(fn, out_schema)
 
 
 def _seq_sqrt_norms(m: np.ndarray) -> np.ndarray:
@@ -285,7 +83,7 @@ def _seq_score_block(qm: np.ndarray, cm: np.ndarray) -> np.ndarray:
     """|Q|×|C| dot-product block, one vectorized add per dimension —
     bit-identical per pair to the ordered left-to-right fold.
 
-    In-place accumulation into preallocated buffers (r16): the naive
+    In-place accumulation into preallocated buffers: the naive
     ``acc = acc + q*c`` shape allocates two |Q|×|C| temporaries per
     dimension — at 1000 queries × 31k rows × 768 dims that is ~576 GB of
     allocator traffic per partition, which made the high-dim ground-truth
@@ -300,32 +98,288 @@ def _seq_score_block(qm: np.ndarray, cm: np.ndarray) -> np.ndarray:
     return acc
 
 
-def _np_assign(mat: np.ndarray, cent_ids: np.ndarray, cent_mat: np.ndarray) -> np.ndarray:
-    """Nearest-centroid ids by max cosine, ties → lowest centroid id
-    (matches ROW_NUMBER ... ORDER BY cos DESC, c_id)."""
-    cos = _seq_score_block(mat, cent_mat) / (
-        _seq_sqrt_norms(mat)[:, None] * _seq_sqrt_norms(cent_mat)[None, :]
-    )
-    out = np.empty(len(mat), dtype=cent_ids.dtype)
-    for r in range(len(mat)):
-        order = np.lexsort((cent_ids, -cos[r]))
-        out[r] = cent_ids[order[0]]
-    return out
-
-
 def _np_assign_topm(
     mat: np.ndarray, cent_ids: np.ndarray, cent_mat: np.ndarray, m: int
 ) -> list[np.ndarray]:
     """Per row: the ids of its ``m`` nearest centroids (max cosine, ties →
-    lowest id), nearest first — the query-side routing for nprobe > 1."""
+    lowest id, matching ROW_NUMBER ... ORDER BY cos DESC, c_id), nearest
+    first."""
     cos = _seq_score_block(mat, cent_mat) / (
         _seq_sqrt_norms(mat)[:, None] * _seq_sqrt_norms(cent_mat)[None, :]
     )
-    out = []
-    for r in range(len(mat)):
-        order = np.lexsort((cent_ids, -cos[r]))
-        out.append(cent_ids[order[:m]])
-    return out
+    return [cent_ids[np.lexsort((cent_ids, -row))[:m]] for row in cos]
+
+
+def _np_assign(mat: np.ndarray, cent_ids: np.ndarray, cent_mat: np.ndarray) -> np.ndarray:
+    """Nearest-centroid id per row (:func:`_np_assign_topm` with m = 1)."""
+    return np.array(
+        [best[0] for best in _np_assign_topm(mat, cent_ids, cent_mat, 1)],
+        dtype=cent_ids.dtype,
+    )
+
+
+# ---------------------------------------------------------------------------
+# The centroid router: one rule for every operator that maps vectors to
+# centroids (assign_clusters, kmeans_update, semantic_dedup, the IVF
+# builds and probes). A vector is routable when its embedding is non-NULL
+# with at least ``dim`` components; it routes on its first ``dim``
+# components to the max-cosine centroid, ties to the lowest centroid id.
+# Anything else gets a NULL centroid id. Small matrices reach the workers
+# by closure capture: PySpark ships a closure over its 1 MB broadcast
+# threshold as a broadcast tied to the stage's lifetime, so no operator
+# manages a broadcast of its own.
+# ---------------------------------------------------------------------------
+
+
+def _key(v):
+    """numpy scalar → Python scalar, so dict keys match across sides."""
+    return v.item() if hasattr(v, "item") else v
+
+
+def _usable(vals: np.ndarray, dim: int) -> np.ndarray:
+    """Mask of array cells that are non-NULL with at least ``dim`` components."""
+    return np.fromiter(
+        (v is not None and len(v) >= dim for v in vals), dtype=bool, count=len(vals)
+    )
+
+
+def _matrix(vals: np.ndarray, dim: int) -> np.ndarray:
+    """(n, dim) float64 matrix of the first ``dim`` components of usable
+    cells — per-row slicing, so ragged cells longer than ``dim`` are fine."""
+    return np.array(
+        [np.asarray(v, dtype=np.float64)[:dim] for v in vals]
+    ).reshape(len(vals), dim)
+
+
+def _collect_centroids(
+    centroids: DataFrame, *, centroid_id_col: str, vec_col: str, dim: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Driver half of the router: (ids, (K, dim) matrix) of the usable
+    centroids, collected once under the small-side cap."""
+    pdf = _collect_small_side(
+        centroids,
+        [F.col(centroid_id_col).alias("_c_id"), F.col(vec_col).alias("_c_vec")],
+        "centroid side",
+    )
+    vecs = pdf["_c_vec"].to_numpy()
+    ok = _usable(vecs, dim)
+    return pdf["_c_id"].to_numpy()[ok], _matrix(vecs[ok], dim)
+
+
+def _route(
+    vals: np.ndarray, c_ids: np.ndarray, c_mat: np.ndarray, dim: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Executor half of the router, per Arrow batch: (mask of routable
+    cells, their (n, dim) matrix, their centroid ids). No cell is routable
+    when no centroid is."""
+    ok = _usable(vals, dim) & (len(c_ids) > 0)
+    mat = _matrix(vals[ok], dim)
+    return ok, mat, _np_assign(mat, c_ids, c_mat)
+
+
+def assign_clusters(
+    vectors: DataFrame,
+    centroids: DataFrame,
+    *,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    centroid_id_col: str = "centroid_id",
+    dim: int = DEFAULT_DIM,
+) -> DataFrame:
+    """IVF coarse quantization: route each vector to its nearest centroid
+    (max cosine over the first ``dim`` components; ties → lowest centroid
+    id). Output: ``[id, payload..., centroid_id]``, the id typed as in the
+    centroid table.
+
+    One Arrow stage over the corpus: the centroid table is collected once
+    (small by contract) and each batch is scored as one |batch|×K block
+    with the sequential fold, so cosines are bit-identical to the DuckDB
+    oracle's ordered fold. Rows whose embedding is NULL or shorter than
+    ``dim`` get a NULL centroid id: they stay in the output, but no
+    cluster-keyed consumer (dedup pair scan, index probe) ever reads them.
+    """
+    from pyspark.sql.types import StructField, StructType
+
+    c_ids, c_mat = _collect_centroids(
+        centroids, centroid_id_col=centroid_id_col, vec_col=vec_col, dim=dim
+    )
+    payload_cols = [c for c in vectors.columns if c != id_col]
+    in_fields = {f.name: f for f in vectors.schema.fields}
+    out_schema = StructType(
+        [in_fields[id_col]]
+        + [in_fields[c] for c in payload_cols]
+        + [StructField(centroid_id_col, centroids.schema[centroid_id_col].dataType)]
+    )
+    in_cols = [id_col] + payload_cols
+
+    def fn(batches):
+        for pdf in batches:
+            ok, _, assigned = _route(pdf[vec_col].to_numpy(), c_ids, c_mat, dim)
+            ids = np.full(len(pdf), None, dtype=object)
+            ids[ok] = assigned
+            yield pdf[in_cols].assign(**{centroid_id_col: ids})
+
+    return fan_out_python_stage(vectors).mapInPandas(fn, out_schema)
+
+
+# ---------------------------------------------------------------------------
+# The top-k skeleton shared by brute_force_topk, ivf_topk, the three
+# indexed probes and pq.ivf_topk_indexed_pq: the queries are collected and
+# grouped by probed centroid on the driver, the corpus streams once through
+# an Arrow stage that scores each centroid group against its queries and
+# keeps a partial top-k per query, and a ROW_NUMBER window merges the
+# partials. Only the scorer differs per operator (float, int8, PQ).
+# ---------------------------------------------------------------------------
+
+
+def _group_queries(
+    queries: DataFrame,
+    *,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    route: tuple[np.ndarray, np.ndarray] | None = None,
+    nprobe: int = 1,
+) -> dict:
+    """Driver half: collect the query side (small by contract) and group it
+    by the ``nprobe`` centroids each query probes under ``route`` ((ids,
+    matrix) from :func:`_collect_centroids`). Returns {centroid id: (query
+    ids, query matrix, query norms)}; without a route, one group keyed None
+    holds every query. Queries that are not routable are dropped."""
+    q_pd = _collect_small_side(queries, [F.col(id_col), F.col(vec_col)], "query side")
+    q_pd = q_pd[_usable(q_pd[vec_col].to_numpy(), dim)]
+    if len(q_pd) == 0:
+        return {}
+    q_ids = q_pd[id_col].to_numpy()
+    q_mat = np.stack(q_pd[vec_col].to_numpy()).astype(np.float64)
+    q_norms = _seq_sqrt_norms(q_mat)
+    if route is None:
+        return {None: (q_ids, q_mat, q_norms)}
+    members: dict = {}
+    for qi, probed in enumerate(_np_assign_topm(q_mat[:, :dim], *route, max(1, nprobe))):
+        for c in probed:
+            members.setdefault(_key(c), []).append(qi)
+    return {
+        c: (q_ids[idx], q_mat[idx], q_norms[idx])
+        for c, idx in ((c, np.array(v)) for c, v in members.items())
+    }
+
+
+def _probed(corpus: DataFrame, q_by_cent: dict) -> DataFrame:
+    """Partition pruning: an indexed scan reads only the probed clusters'
+    files (NULL-partition rows are never probed)."""
+    return corpus.filter(F.col("centroid_id").isin(sorted(q_by_cent)))
+
+
+def _float_score(vec_col: str):
+    """Exact float cosine block of a group against its queries."""
+
+    def score(cent, grp, qm, qn):
+        cm = np.stack(grp[vec_col].to_numpy()).astype(np.float64)
+        return _seq_score_block(qm, cm) / (qn[:, None] * _seq_sqrt_norms(cm)[None, :])
+
+    return score
+
+
+def _topk_partials(
+    df: DataFrame,
+    q_by_cent: dict,
+    score,
+    *,
+    k: int,
+    id_col: str,
+    q_id_type: str,
+    groups=None,
+    col: str = "cos",
+) -> DataFrame:
+    """Executor half: one Arrow pass over ``df``. Each batch splits into
+    centroid groups (``groups(pdf)``; default: the stored ``centroid_id``
+    column), ``score(centroid, rows, q_mat, q_norms)`` gives the
+    |Q|×|rows| cosine block of the queries probing that centroid, and each
+    query keeps its partial top-k: self-match excluded before the cut, ties
+    to the lower neighbor id, non-finite scores (zero-norm vectors) dropped.
+    Shuffle volume is O(|Q|·k·partitions), never O(|Q|·|C|)."""
+    if groups is None:
+        groups = lambda pdf: pdf.groupby("centroid_id")  # noqa: E731
+    n_id_type = df.schema[id_col].dataType.simpleString()
+
+    def search(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            rows_q, rows_n, rows_c = [], [], []
+            for cent, grp in groups(pdf):
+                cent = _key(cent)
+                if cent not in q_by_cent:
+                    continue
+                q_ids, qm, qn = q_by_cent[cent]
+                n_ids = grp[id_col].to_numpy()
+                cos = score(cent, grp, qm, qn)
+                for qi in range(len(q_ids)):
+                    row = cos[qi]
+                    mask = n_ids == q_ids[qi]
+                    if mask.any():
+                        row = row.copy()
+                        row[mask] = -np.inf
+                    order = np.lexsort((n_ids, -row))[:k]
+                    keep = order[np.isfinite(row[order])]
+                    rows_q.extend([q_ids[qi]] * len(keep))
+                    rows_n.extend(n_ids[keep])
+                    rows_c.extend(row[keep])
+            yield pd.DataFrame({"q_id": rows_q, "n_id": rows_n, col: rows_c})
+
+    return fan_out_python_stage(df).mapInPandas(
+        search, schema=f"q_id {q_id_type}, n_id {n_id_type}, {col} double"
+    )
+
+
+def _merge_topk(
+    partials: DataFrame, k: int, *, col: str = "cos", rank: str = "rk", rounded: bool = False
+) -> DataFrame:
+    """Final merge: ROW_NUMBER per query over (score DESC, n_id), top k.
+    Output (q_id, n_id, cos, <rank>); ``rounded`` emits cos at 6dp."""
+    w = W.partitionBy("q_id").orderBy(F.col(col).desc(), F.col("n_id"))
+    score = F.round(col, 6) if rounded else F.col(col)
+    return (
+        partials.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= k)
+        .select("q_id", "n_id", score.alias("cos"), F.col("_rn").alias(rank))
+    )
+
+
+def _id_type(df: DataFrame, col: str) -> str:
+    return df.schema[col].dataType.simpleString()
+
+
+def brute_force_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    *,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 3,
+    dim: int = DEFAULT_DIM,
+) -> DataFrame:
+    """Exact top-k neighbors per query by cosine: the top-k skeleton with
+    one group holding every query. The corpus streams partition-parallel
+    through the score stage; a final window merges the partials.
+
+    Float discipline: the score block accumulates SEQUENTIALLY over
+    dimensions (one vectorized add per dim), so every cosine is bit-identical
+    to the ordered left-to-right fold the DuckDB oracle computes — numpy's
+    pairwise-summing dot() would not be.
+    """
+    q_by_cent = _group_queries(queries, id_col=id_col, vec_col=vec_col, dim=dim)
+    partials = _topk_partials(
+        corpus,
+        q_by_cent,
+        _float_score(vec_col),
+        k=k,
+        id_col=id_col,
+        q_id_type=_id_type(queries, id_col),
+        groups=lambda pdf: [(None, pdf)],
+    )
+    return _merge_topk(partials, k)
 
 
 def ivf_topk(
@@ -346,12 +400,11 @@ def ivf_topk(
     brute force (every corpus row lives in exactly one cluster, so the
     probed union covers the corpus with no duplicates).
 
-    Physical plan: centroids and the (small) per-cluster query blocks
-    broadcast; the corpus streams once through a vectorized assign+search
-    stage partitioned on centroid, emitting per-partition partial top-k; a
-    final window merges. Total score work = Σ_cluster |Q_probing_c|·|C_c| —
-    the IVF saving is real, not simulated, and scales down linearly in
-    nprobe/n_centroids.
+    Physical plan: the top-k skeleton, with the corpus routed inside the
+    score stage (batch by batch, through the centroid router) instead of
+    read from a stored ``centroid_id``. Total score work = Σ_cluster
+    |Q_probing_c|·|C_c| — the IVF saving is real, not simulated, and
+    scales down linearly in nprobe/n_centroids.
 
     SIZING RULE (measured, recall_bench.py / SCALE.md round-14): train
     K ≈ √N centroids (a few Lloyd steps; per-probe cost then ≈ N/K ≈ √N
@@ -367,84 +420,30 @@ def ivf_topk(
     kernel there. Per-call corpus assignment makes the TRANSIENT form
     uneconomical at K ≈ √N — use build_ivf_index + ivf_topk_indexed, which
     pay assignment once at build."""
-    cent_pd = _collect_small_side(
+    c_ids, c_mat = _collect_centroids(
         centroids,
-        [
-            F.col("centroid_id") if "centroid_id" in centroids.columns else F.col(id_col).alias("centroid_id"),
-            F.col(vec_col),
-        ],
-        "centroid side",
+        centroid_id_col="centroid_id" if "centroid_id" in centroids.columns else id_col,
+        vec_col=vec_col,
+        dim=dim,
     )
-    cent_ids = cent_pd["centroid_id"].to_numpy()
-    cent_mat = np.stack(cent_pd[vec_col].to_numpy()).astype(np.float64)
-
-    q_pd = _collect_small_side(queries, [F.col(id_col), F.col(vec_col)], "query side")
-    q_ids = q_pd[id_col].to_numpy()
-    q_mat = np.stack(q_pd[vec_col].to_numpy()).astype(np.float64)
-    q_probes = _np_assign_topm(q_mat, cent_ids, cent_mat, max(1, nprobe))
-    q_norms = _seq_sqrt_norms(q_mat)
-    # per-centroid query blocks; with nprobe > 1 a query appears in several
-    # blocks, and the final top-k window merges its per-cluster partials
-    # (no neighbor duplicates: each corpus row belongs to ONE cluster)
-    members: dict[int, list[int]] = {}
-    for qi, probed in enumerate(q_probes):
-        for c in probed:
-            # .item() (not int()): centroid ids inherit the caller's id
-            # type — string ids are legal, same as ivf_topk_indexed
-            members.setdefault(c.item() if hasattr(c, "item") else c, []).append(qi)
-    q_by_cent = {
-        c: (q_ids[idx], q_mat[idx], q_norms[idx])
-        for c, idx in ((c, np.array(v)) for c, v in members.items())
-    }
-
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((q_by_cent, cent_ids, cent_mat))
-
-    def search(batches):
-        q_by, c_ids_b, c_mat_b = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n_ids = pdf[id_col].to_numpy()
-            assigned = _np_assign(cm, c_ids_b, c_mat_b)
-            c_norms = _seq_sqrt_norms(cm)
-            rows_q, rows_n, rows_c = [], [], []
-            for cent in np.unique(assigned):
-                qc = q_by.get(cent.item() if hasattr(cent, "item") else cent)
-                if qc is None:
-                    continue
-                sub_q_ids, sub_qm, sub_qn = qc
-                sel = assigned == cent
-                sub_cm, sub_nids, sub_cn = cm[sel], n_ids[sel], c_norms[sel]
-                cos = _seq_score_block(sub_qm, sub_cm) / (
-                    sub_qn[:, None] * sub_cn[None, :]
-                )
-                for qi in range(len(sub_q_ids)):
-                    row = cos[qi]
-                    mask = sub_nids == sub_q_ids[qi]
-                    if mask.any():
-                        row = row.copy()
-                        row[mask] = -np.inf
-                    order = np.lexsort((sub_nids, -row))[:k]
-                    keep = order[np.isfinite(row[order])]
-                    rows_q.extend([sub_q_ids[qi]] * len(keep))
-                    rows_n.extend(sub_nids[keep])
-                    rows_c.extend(row[keep])
-            yield pd.DataFrame({"q_id": rows_q, "n_id": rows_n, "cos": rows_c})
-
-    # derive id field types from the actual schemas (see brute_force_topk)
-    q_id_type = queries.schema[id_col].dataType.simpleString()
-    n_id_type = corpus.schema[id_col].dataType.simpleString()
-    partials = fan_out_python_stage(corpus).mapInPandas(
-        search, schema=f"q_id {q_id_type}, n_id {n_id_type}, cos double"
+    q_by_cent = _group_queries(
+        queries, id_col=id_col, vec_col=vec_col, dim=dim, route=(c_ids, c_mat), nprobe=nprobe
     )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (
-        partials.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cos", "rk")
+
+    def routed(pdf):
+        ok, _, assigned = _route(pdf[vec_col].to_numpy(), c_ids, c_mat, dim)
+        return pdf[ok].groupby(assigned)
+
+    partials = _topk_partials(
+        corpus,
+        q_by_cent,
+        _float_score(vec_col),
+        k=k,
+        id_col=id_col,
+        q_id_type=_id_type(queries, id_col),
+        groups=routed,
     )
+    return _merge_topk(partials, k)
 
 
 def blocked_near_dup(
@@ -606,9 +605,6 @@ def hyperplanes(n: int) -> list[list[int]]:
     ]
 
 
-HYPERPLANES: list[list[int]] = hyperplanes(8)
-
-
 def centroid_outliers(
     vectors: DataFrame,
     *,
@@ -639,24 +635,6 @@ def centroid_outliers(
     return d.orderBy(F.col("dist").desc(), F.col(id_col)).limit(k)
 
 
-def hyperplane_bucket(vec: Column, *, dim: int = DEFAULT_DIM) -> Column:
-    """Sign-LSH bucket id: bit j = [vec · plane_j >= 0]; 8 planes → 256
-    buckets. The dot products are flat codegen'd chains with strict
-    left-to-right addition (same float discipline as `dot`), so bucket
-    assignment is bit-identical to the DuckDB oracle's ordered fold."""
-    bucket = F.lit(0)
-    for j, plane in enumerate(HYPERPLANES):
-        terms = [
-            F.element_at(vec, i + 1).cast("double") * F.lit(float(plane[i]))
-            for i in range(dim)
-        ]
-        acc = terms[0]
-        for t in terms[1:]:
-            acc = acc + t
-        bucket = bucket + F.when(acc >= 0, F.lit(1 << j)).otherwise(F.lit(0))
-    return bucket
-
-
 def hyperplane_lsh_pairs(
     vectors: DataFrame,
     *,
@@ -682,7 +660,7 @@ def hyperplane_lsh_pairs(
     cosine per pair) cost 3-5 s of driver-side analysis + codegen per fresh
     plan; the numpy form keeps the plan tiny and the quadratic work
     BLAS-shaped. Accumulation is strict left-to-right over dimensions in
-    float64, so cosines stay bit-identical to `dot`/`hyperplane_bucket` and
+    float64, so bucket signs and cosines stay bit-identical to `dot` and
     the ordered-fold DuckDB oracle.
 
     ``max_bucket_size`` is the same mega-bucket guard as
@@ -704,7 +682,7 @@ def hyperplane_lsh_pairs(
     if dim > planes_full.shape[1]:
         raise ValueError(
             f"dim={dim} exceeds the built-in hyperplane width "
-            f"{planes_full.shape[1]} — extend HYPERPLANES for wider vectors"
+            f"{planes_full.shape[1]} — extend hyperplanes() for wider vectors"
         )
     planes = planes_full[:, :dim]
 
@@ -866,54 +844,40 @@ def kmeans_update(
     centroid_id_col: str = "centroid_id",
     dim: int = DEFAULT_DIM,
 ) -> DataFrame:
-    """One Lloyd iteration of k-means, distributed: centroids (small by
-    contract) are collected once and shipped in a broadcast; a single Arrow
-    stage streams the corpus partition-parallel, routes each batch to its
-    nearest centroid (max cosine, ties → lowest id — `_np_assign`, the same
-    bit-faithful scorer IVF uses) and accumulates per-centroid per-dimension
+    """One Lloyd iteration of k-means, distributed: a single Arrow stage
+    streams the corpus partition-parallel, routes each batch through the
+    centroid router (the same bit-faithful scorer IVF uses; NULL or short
+    embeddings join no cluster) and accumulates per-centroid per-dimension
     PARTIAL sums map-side. The only shuffle carries k×dim partial rows per
     partition — never the corpus, never an exploded member table.
 
-    Returns (centroid_id, pos, n_members, dim_sum): callers divide
-    dim_sum/n_members for the new centroid. Exact reproducibility: member
-    dims are rounded to 9dp and accumulated as SCALED int64 (x·1e9 — exact
-    for float32-origin values, whose ·1e9 product fits a double mantissa),
-    so partial sums are integer arithmetic and order-independent; the final
-    agg divides once. Float summation would drift with shuffle order.
+    Returns (centroid_id, pos, n_members, dim_sum), centroid_id typed as in
+    the centroid table: callers divide dim_sum/n_members for the new
+    centroid. Exact reproducibility: member dims are rounded to 9dp and
+    accumulated as SCALED int64 (x·1e9 — exact for float32-origin values,
+    whose ·1e9 product fits a double mantissa), so partial sums are integer
+    arithmetic and order-independent; the final agg divides once. Float
+    summation would drift with shuffle order.
     """
-    cent_pd = _collect_small_side(
-        centroids, [F.col(centroid_id_col), F.col(vec_col)], "centroid side"
+    c_ids, c_mat = _collect_centroids(
+        centroids, centroid_id_col=centroid_id_col, vec_col=vec_col, dim=dim
     )
-    order = np.argsort(cent_pd[centroid_id_col].to_numpy(), kind="stable")
-    cent_ids = cent_pd[centroid_id_col].to_numpy()[order]
-    cent_mat = np.stack(cent_pd[vec_col].to_numpy()[order]).astype(np.float64)[:, :dim]
-    k = len(cent_ids)
-
-    sc = vectors.sparkSession.sparkContext
-    bc = sc.broadcast((cent_ids, cent_mat))
+    pos_of = {_key(c): i for i, c in enumerate(c_ids)}
 
     def partials(batches):
-        c_ids, c_mat = bc.value
-        counts = np.zeros(k, dtype=np.int64)
-        sums = np.zeros((k, dim), dtype=np.int64)
+        counts = np.zeros(len(c_ids), dtype=np.int64)
+        sums = np.zeros((len(c_ids), dim), dtype=np.int64)
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)[:, :dim]
-            assigned = _np_assign(V, c_ids, c_mat)
-            Vi = np.rint(V * 1e9).astype(np.int64)
-            for ci in range(k):
-                sel = assigned == c_ids[ci]
-                n = int(sel.sum())
-                if n:
-                    counts[ci] += n
-                    sums[ci] += Vi[sel].sum(axis=0)
+            _, V, assigned = _route(pdf[vec_col].to_numpy(), c_ids, c_mat, dim)
+            pos = np.array([pos_of[_key(c)] for c in assigned], dtype=np.int64)
+            np.add.at(counts, pos, 1)
+            np.add.at(sums, pos, np.rint(V * 1e9).astype(np.int64))
         live = np.nonzero(counts)[0]
         if len(live) == 0:
             return
         yield pd.DataFrame(
             {
-                "centroid_id": np.repeat(cent_ids[live], dim),
+                "centroid_id": np.repeat(c_ids[live], dim),
                 "pos": np.tile(np.arange(dim, dtype=np.int32), len(live)),
                 "n": np.repeat(counts[live], dim),
                 "isum": sums[live].ravel(),
@@ -921,7 +885,8 @@ def kmeans_update(
         )
 
     part = vectors.select(id_col, vec_col).mapInPandas(
-        partials, schema="centroid_id long, pos int, n long, isum long"
+        partials,
+        schema=f"centroid_id {_id_type(centroids, centroid_id_col)}, pos int, n long, isum long",
     )
     return (
         part.groupBy(F.col("centroid_id").alias(centroid_id_col), "pos")
@@ -947,7 +912,6 @@ def build_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = DEFAULT_DIM,
-    engine: str = "arrow",
     quantize: bool = False,
     pq_codebooks: DataFrame | None = None,
 ) -> None:
@@ -960,9 +924,11 @@ def build_ivf_index(
     without it every scan task writes a file into EVERY centroid dir
     (tasks × K small files — measured 354 s at K=448 from 32 tasks);
     repartitioning on centroid_id first writes one file per cluster.
-    Assignment runs on the Arrow engine (bit-identical to the SQL plan;
-    the codegen'd dot chains dominate build cost at K≈√N — see
-    assign_clusters). Measured at K=448 / 200k×64f: 305 s → 17 s.
+    Measured at K=448 / 200k×64f: 17 s.
+
+    Rows whose embedding is NULL or shorter than ``dim`` get a NULL
+    centroid_id (assign_clusters) and land in the NULL partition: they stay
+    in the index, and no probe reads them.
 
     SIZING RULE: K ≈ √N centroids (see ivf_topk's docstring for the full
     measured recall/nprobe/structure rule); the persisted probe then scans
@@ -988,17 +954,9 @@ def build_ivf_index(
     (ivf_topk_indexed_pq reads m bytes/row where int8 reads dim and float
     reads 4·dim). Composable with ``quantize=True``: a production index
     stores all tiers and each probe's column pruning pays only for the
-    tier it reads."""
-    # engine="sql" is the NULL-tolerant escape hatch for dirty corpora at
-    # initial build time, mirroring append_ivf_index's parameter (ADVICE
-    # r14: a corpus with NULL embeddings fails inside the Arrow kernel's
-    # np.stack with no override otherwise). The tolerance covers the
-    # ASSIGNMENT stage only: quantize=True always requires non-NULL
-    # embeddings — _quantize_stage rejects NULL rows with an actionable
-    # error instead of np.stack's shape crash (ADVICE r15).
-    assigned = assign_clusters(
-        corpus, centroids, id_col=id_col, vec_col=vec_col, dim=dim, engine=engine
-    )
+    tier it reads; both quantizers reject NULL embeddings with an
+    actionable error, so filter them before building a quantized index."""
+    assigned = assign_clusters(corpus, centroids, id_col=id_col, vec_col=vec_col, dim=dim)
     if quantize:
         assigned = _quantize_stage(assigned, vec_col=vec_col)
     if pq_codebooks is not None:
@@ -1018,10 +976,9 @@ def build_ivf_index(
 
 def _quantize_stage(df: DataFrame, *, vec_col: str = "embedding") -> DataFrame:
     """Append int8 scalar-quantization columns (qvec, qscale, l2n) in one
-    Arrow stage — same kernel math as quantize_int8_digest, kept off the
-    HOF/codegen path for the same reason as _np_assign (the 305→17 s
-    index-build lesson: per-element interpreted lambdas lose to matrix
-    kernels by >10× at K≈√N scale)."""
+    Arrow stage — same kernel math as quantize_int8_digest. NULL
+    embeddings are rejected: dropping rows from an index silently would be
+    worse than failing with the fix spelled out."""
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     ) + ", qvec array<tinyint>, qscale double, l2n double"
@@ -1030,12 +987,6 @@ def _quantize_stage(df: DataFrame, *, vec_col: str = "embedding") -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            # quantize=True requires non-NULL embeddings regardless of the
-            # assignment engine: engine="sql" tolerates NULLs at ASSIGNMENT
-            # (NULL similarity), but a NULL row reaching np.stack here would
-            # crash with an opaque shape error — and silently dropping rows
-            # from an index would be worse. Fail with the fix spelled out
-            # (r15 review).
             nulls = pdf[vec_col].isna()
             if nulls.any():
                 raise ValueError(
@@ -1071,7 +1022,6 @@ def append_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = DEFAULT_DIM,
-    engine: str = "arrow",
 ) -> None:
     """Incremental index growth — the continuous-ingest twin of
     build_ivf_index (same family as the incremental dedup ledgers): route
@@ -1083,27 +1033,23 @@ def append_ivf_index(
     recall drifts only as the new data's distribution leaves the trained
     quantizer, which is a rebuild trigger, not an append concern.
 
-    Same two scale fixes as build_ivf_index (r14 review): Arrow-engine
-    assignment (the SQL dot chains dominate at K≈√N) and a centroid-keyed
-    repartition before the write (without it every append task drops a
-    file into every centroid dir — tasks×K small files per batch,
-    progressively shredding the pruned layout). The Arrow engine rejects
-    NULL embeddings loudly (np.stack); pass ``engine="sql"`` to keep the
-    old tolerate-NULL-similarity behavior for dirty batches — at the
-    ASSIGNMENT stage only. Appending into a quantize=True index forces
-    quantization of the batch (below), and the quantize stage rejects NULL
-    embeddings with an actionable error under either engine (ADVICE r15):
-    filter NULLs first when appending dirty batches to a quantized index."""
+    Same assignment and layout as build_ivf_index: the router, then a
+    centroid-keyed repartition before the write (without it every append
+    task drops a file into every centroid dir — tasks×K small files per
+    batch, progressively shredding the pruned layout). NULL or short
+    embeddings land in the NULL partition, as at build time. Appending into
+    a quantized or PQ-coded index quantizes the batch too, and those stages
+    reject NULL embeddings: filter them first when appending dirty batches
+    to such an index."""
     spark = new_vectors.sparkSession
     root = path.rstrip("/")
     centroids = spark.read.parquet(f"{root}/centroids")
     assigned = assign_clusters(
-        new_vectors, centroids, id_col=id_col, vec_col=vec_col, dim=dim,
-        engine=engine,
+        new_vectors, centroids, id_col=id_col, vec_col=vec_col, dim=dim
     )
     # a quantize=True index must STAY quantized: appending rows without
     # qvec/qscale/l2n would NULL those columns on the new files and crash
-    # (or mislead) the next int8 probe (r15 review)
+    # (or mislead) the next int8 probe
     existing_cols = spark.read.parquet(f"{root}/corpus").columns
     if "qvec" in existing_cols:
         assigned = _quantize_stage(assigned, vec_col=vec_col)
@@ -1149,92 +1095,22 @@ def ivf_topk_indexed(
 
     Same semantics as ivf_topk at equal (centroids, nprobe); at
     nprobe = n_centroids it degenerates to exact brute force."""
-    spark = queries.sparkSession
-    corpus, centroids = load_ivf_index(spark, index_path)
-    cent_pd = _collect_small_side(
-        centroids, [F.col("centroid_id"), F.col(vec_col)], "centroid side"
+    corpus, centroids = load_ivf_index(queries.sparkSession, index_path)
+    route = _collect_centroids(
+        centroids, centroid_id_col="centroid_id", vec_col=vec_col, dim=dim
     )
-    cent_ids = cent_pd["centroid_id"].to_numpy()
-    cent_mat = np.stack(cent_pd[vec_col].to_numpy()).astype(np.float64)
-    q_pd = _collect_small_side(queries, [F.col(id_col), F.col(vec_col)], "query side")
-    q_ids = q_pd[id_col].to_numpy()
-    q_mat = np.stack(q_pd[vec_col].to_numpy()).astype(np.float64)
-    q_probes = _np_assign_topm(q_mat, cent_ids, cent_mat, max(1, nprobe))
-    q_norms = _seq_sqrt_norms(q_mat)
-
-    # _np_assign_topm returns the probed centroids' IDs (not positions) —
-    # use them verbatim; indexing cent_ids with them would silently probe
-    # the wrong cluster whenever ids aren't 0..n-1 in collect order.
-    members: dict = {}
-    for qi, probed in enumerate(q_probes):
-        for c in probed:
-            key = c.item() if hasattr(c, "item") else c
-            members.setdefault(key, []).append(qi)
-    q_by_cent = {
-        c: (q_ids[idx], q_mat[idx], q_norms[idx])
-        for c, idx in ((c, np.array(v)) for c, v in members.items())
-    }
-    probed_ids = sorted(q_by_cent)
-    # partition pruning: the scan skips every unprobed cluster's files
-    pruned = corpus.filter(F.col("centroid_id").isin(probed_ids))
-
-    sc = spark.sparkContext
-    bq = sc.broadcast(q_by_cent)
-
-    def search(batches):
-        q_by = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows_q, rows_n, rows_c = [], [], []
-            for cent, grp in pdf.groupby("centroid_id"):
-                key = cent.item() if hasattr(cent, "item") else cent
-                qc = q_by.get(key)
-                if qc is None:
-                    continue
-                sub_q_ids, sub_qm, sub_qn = qc
-                sub_cm = np.stack(grp[vec_col].to_numpy()).astype(np.float64)
-                sub_nids = grp[id_col].to_numpy()
-                sub_cn = _seq_sqrt_norms(sub_cm)
-                cos = _seq_score_block(sub_qm, sub_cm) / (
-                    sub_qn[:, None] * sub_cn[None, :]
-                )
-                for qi in range(len(sub_q_ids)):
-                    row = cos[qi]
-                    # self-matches excluded, same contract as
-                    # brute_force_topk/ivf_topk
-                    mask = sub_nids == sub_q_ids[qi]
-                    if mask.any():
-                        row = row.copy()
-                        row[mask] = -np.inf
-                    order = np.lexsort((sub_nids, -row))[:k]
-                    # zero-norm vectors give cos = 0/0 = NaN — drop
-                    # non-finite scores, same contract as ivf_topk
-                    keep = order[np.isfinite(row[order])]
-                    rows_q.extend([sub_q_ids[qi]] * len(keep))
-                    rows_n.extend(sub_nids[keep])
-                    rows_c.extend(row[keep])
-            yield pd.DataFrame({"q_id": rows_q, "n_id": rows_n, "cos": rows_c})
-
-    # derive the id field types from the actual schemas — the corpus id's
-    # native type must survive (hard-coding long would coerce/fail string
-    # or int ids that id_col= legitimately allows)
-    q_id_type = queries.schema[id_col].dataType.simpleString()
-    n_id_type = corpus.schema[id_col].dataType.simpleString()
-    partials = fan_out_python_stage(pruned).mapInPandas(
-        search, schema=f"q_id {q_id_type}, n_id {n_id_type}, cos double"
+    q_by_cent = _group_queries(
+        queries, id_col=id_col, vec_col=vec_col, dim=dim, route=route, nprobe=nprobe
     )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (
-        partials.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(
-            F.col("q_id"),
-            F.col("n_id"),
-            F.round("cos", 6).alias("cos"),
-            F.col("_rn").alias("rank"),
-        )
+    partials = _topk_partials(
+        _probed(corpus, q_by_cent),
+        q_by_cent,
+        _float_score(vec_col),
+        k=k,
+        id_col=id_col,
+        q_id_type=_id_type(queries, id_col),
     )
+    return _merge_topk(partials, k, rank="rank", rounded=True)
 
 
 def ivf_topk_indexed_int8(
@@ -1283,132 +1159,68 @@ def ivf_topk_indexed_int8(
     the output equals brute_force_topk exactly (the rerank is exact float
     arithmetic via the shared _seq_score_block kernel); tests pin this.
     """
-    spark = queries.sparkSession
-    corpus, centroids = load_ivf_index(spark, index_path)
+    corpus, centroids = load_ivf_index(queries.sparkSession, index_path)
     if "qvec" not in corpus.columns:
         raise ValueError(
             "index has no int8 columns; build with build_ivf_index(..., "
             "quantize=True)"
         )
-    cent_pd = _collect_small_side(
-        centroids, [F.col("centroid_id"), F.col(vec_col)], "centroid side"
+    route = _collect_centroids(
+        centroids, centroid_id_col="centroid_id", vec_col=vec_col, dim=dim
     )
-    cent_ids = cent_pd["centroid_id"].to_numpy()
-    cent_mat = np.stack(cent_pd[vec_col].to_numpy()).astype(np.float64)
-    q_pd = _collect_small_side(queries, [F.col(id_col), F.col(vec_col)], "query side")
-    q_ids = q_pd[id_col].to_numpy()
-    q_mat = np.stack(q_pd[vec_col].to_numpy()).astype(np.float64)
-    q_probes = _np_assign_topm(q_mat, cent_ids, cent_mat, max(1, nprobe))
-    q_norms = _seq_sqrt_norms(q_mat)
-
-    members: dict = {}
-    for qi, probed in enumerate(q_probes):
-        for c in probed:
-            key = c.item() if hasattr(c, "item") else c
-            members.setdefault(key, []).append(qi)
-    q_by_cent = {
-        c: (q_ids[idx], q_mat[idx], q_norms[idx])
-        for c, idx in ((c, np.array(v)) for c, v in members.items())
-    }
-    probed_ids = sorted(q_by_cent)
-    sc = spark.sparkContext
-    bq = sc.broadcast(q_by_cent)
+    q_by_cent = _group_queries(
+        queries, id_col=id_col, vec_col=vec_col, dim=dim, route=route, nprobe=nprobe
+    )
+    q_id_type = _id_type(queries, id_col)
     c_take = max(k, rerank_factor * k)
 
+    def score_int8(cent, grp, qm, qn):
+        # approximate dot via the shared ORDERED-fold kernel (not BLAS
+        # matmul): candidate selection ties then break identically across
+        # engines, which the q120 SQL oracle depends on
+        qm8 = np.stack(grp["qvec"].to_numpy()).astype(np.float64)
+        dots = _seq_score_block(qm, qm8) * grp["qscale"].to_numpy()[None, :]
+        l2n = grp["l2n"].to_numpy()
+        return dots / (qn[:, None] * np.where(l2n == 0.0, np.inf, l2n)[None, :])
+
     # ---- int8 candidate scan: float column NEVER read here ----------------
-    pruned_q = corpus.filter(F.col("centroid_id").isin(probed_ids)).select(
-        id_col, "centroid_id", "qvec", "qscale", "l2n"
+    partials = _topk_partials(
+        _probed(corpus, q_by_cent).select(id_col, "centroid_id", "qvec", "qscale", "l2n"),
+        q_by_cent,
+        score_int8,
+        k=c_take,
+        id_col=id_col,
+        q_id_type=q_id_type,
+        col="acos",
     )
-
-    def search_int8(batches):
-        q_by = bq.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows_q, rows_n, rows_c = [], [], []
-            for cent, grp in pdf.groupby("centroid_id"):
-                key = cent.item() if hasattr(cent, "item") else cent
-                qc = q_by.get(key)
-                if qc is None:
-                    continue
-                sub_q_ids, sub_qm, sub_qn = qc
-                qm8 = np.stack(grp["qvec"].to_numpy()).astype(np.float64)
-                scale = grp["qscale"].to_numpy()
-                l2n = grp["l2n"].to_numpy()
-                sub_nids = grp[id_col].to_numpy()
-                # approximate dot via the shared ORDERED-fold kernel (not
-                # BLAS matmul): candidate selection ties then break
-                # identically across engines, which the q120 SQL oracle
-                # depends on — and acos values are bit-comparable with
-                # DuckDB's left-to-right list fold
-                dots = _seq_score_block(sub_qm, qm8) * scale[None, :]
-                denom = sub_qn[:, None] * np.where(l2n == 0.0, np.inf, l2n)[None, :]
-                cos = dots / denom
-                for qi in range(len(sub_q_ids)):
-                    row = cos[qi]
-                    mask = sub_nids == sub_q_ids[qi]
-                    if mask.any():
-                        row = row.copy()
-                        row[mask] = -np.inf
-                    order = np.lexsort((sub_nids, -row))[:c_take]
-                    keep = order[np.isfinite(row[order])]
-                    rows_q.extend([sub_q_ids[qi]] * len(keep))
-                    rows_n.extend(sub_nids[keep])
-                    rows_c.extend(row[keep])
-            yield pd.DataFrame({"q_id": rows_q, "n_id": rows_n, "acos": rows_c})
-
-    q_id_type = queries.schema[id_col].dataType.simpleString()
-    n_id_type = corpus.schema[id_col].dataType.simpleString()
-    partials = fan_out_python_stage(pruned_q).mapInPandas(
-        search_int8, schema=f"q_id {q_id_type}, n_id {n_id_type}, acos double"
-    )
-    wq = W.partitionBy("q_id").orderBy(F.col("acos").desc(), F.col("n_id"))
     if rerank_factor == 0:
         # int8-only ranking: the float column is NEVER read — the measured
         # 4x-bytes serving shape (docstring rule). cos is the int8
         # APPROXIMATE cosine; ids carry the same recall as the float probe
         # on every measured regime.
-        return (
-            partials.withColumn("_rn", F.row_number().over(wq))
-            .filter(F.col("_rn") <= k)
-            .select(
-                F.col("q_id"),
-                F.col("n_id"),
-                F.round("acos", 6).alias("cos"),
-                F.col("_rn").alias("rank"),
-            )
-        )
-    cand = (
-        partials.withColumn("_rn", F.row_number().over(wq))
-        .filter(F.col("_rn") <= c_take)
-        .select("q_id", "n_id")
-    )
+        return _merge_topk(partials, k, col="acos", rank="rank", rounded=True)
+    cand = _merge_topk(partials, c_take, col="acos").select("q_id", "n_id")
 
     # ---- float rerank: only the candidates' vectors are read --------------
-    pruned_f = corpus.filter(F.col("centroid_id").isin(probed_ids)).select(
-        F.col(id_col).alias("n_id"), vec_col
-    )
-    cand_vec = cand.join(pruned_f, "n_id")
-    q_lookup = {qid: (q_mat[i], q_norms[i]) for i, qid in enumerate(q_ids)}
-    bql = sc.broadcast(q_lookup)
+    pruned_f = _probed(corpus, q_by_cent).select(F.col(id_col).alias("n_id"), vec_col)
+    lookup = {
+        qid: (qm[i], qn[i])
+        for q_ids, qm, qn in q_by_cent.values()
+        for i, qid in enumerate(q_ids)
+    }
 
     def rerank(batches):
-        lookup = bql.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             outs = []
-            # block per query: one (1,d)@(d,n) kernel per group instead of
-            # a per-row Python loop of 1x1 matmuls (r15 review — the same
-            # interpreted-vs-kernel lesson _quantize_stage cites); the
-            # left-to-right dimension fold is identical, so scores stay
-            # bit-equal to brute_force_topk
+            # one (1,d)@(d,n) block per query; the left-to-right dimension
+            # fold is identical, so scores stay bit-equal to brute_force_topk
             for qid, grp in pdf.groupby("q_id", sort=False):
                 qv, qn = lookup[qid]
                 cm = np.stack(grp[vec_col].to_numpy()).astype(np.float64)
-                cn = _seq_sqrt_norms(cm)
                 dots = _seq_score_block(qv[None, :], cm)[0]
-                denom = qn * cn
+                denom = qn * _seq_sqrt_norms(cm)
                 with np.errstate(divide="ignore", invalid="ignore"):
                     cos = np.where(denom > 0, dots / denom, np.nan)
                 res = grp[["q_id", "n_id"]].copy()
@@ -1417,20 +1229,10 @@ def ivf_topk_indexed_int8(
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-    rescored = cand_vec.mapInPandas(
-        rerank, schema=f"q_id {q_id_type}, n_id {n_id_type}, cos double"
+    rescored = cand.join(pruned_f, "n_id").mapInPandas(
+        rerank, schema=f"q_id {q_id_type}, n_id {_id_type(corpus, id_col)}, cos double"
     )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (
-        rescored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(
-            F.col("q_id"),
-            F.col("n_id"),
-            F.round("cos", 6).alias("cos"),
-            F.col("_rn").alias("rank"),
-        )
-    )
+    return _merge_topk(rescored, k, rank="rank", rounded=True)
 
 
 def semantic_dedup(
@@ -1444,7 +1246,7 @@ def semantic_dedup(
     max_cluster_size: int | None = 10_000,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: route every vector to its
-    nearest centroid (assign_clusters — broadcast, one corpus pass), then
+    nearest centroid (assign_clusters — one corpus pass), then
     compare pairs ONLY within a cluster and drop the higher id of any pair
     at/over ``threshold`` cosine. The clustering is the scale trick: the
     quadratic pair scan runs per cluster (Σ|c|² work, parallel across
@@ -1459,69 +1261,22 @@ def semantic_dedup(
     pairs by size·cap at the cost of cross-sub-cluster recall (same
     treatment as lsh_candidate_pairs' salt mode, observed metric included).
     Zero-norm vectors produce NaN cosine and are never dropped (explicitly
-    filtered — Spark would otherwise order NaN above every threshold).
+    filtered — Spark would otherwise order NaN above every threshold); NULL
+    or short embeddings join no cluster and are always kept.
 
     Returns the kept rows of ``vectors``. Reference scope note: the
     reference has no embedding pipeline; this is a scale extension
     (SemDeDup, Abbas et al. 2023) built from assign_clusters +
     the bit-stable cosine used across the similarity stack."""
     from nexgap_spark.operators.dedup import cap_partition_size
+    from nexgap_spark.session import adaptive_width
 
-    # routing via the Arrow/numpy twin of assign_clusters (_np_assign —
-    # same max-cos / lowest-id tiebreak, same sequential fold): the
-    # centroid table is small by contract (IVF pattern, _collect_small_side
-    # enforces it), and a vectorized |batch|×k score block beats the
-    # broadcast-join 64-term expression chains ~5× measured at sf0.1
-    cent_pd = _collect_small_side(
-        centroids, [F.col("centroid_id"), F.col(vec_col)], "centroid side"
-    )
-    cent_pd = cent_pd[
-        cent_pd[vec_col].map(lambda v: v is not None and len(v) >= dim)
-    ]
-    if len(cent_pd) == 0:
-        # no usable centroids → nothing clusters → nothing can be dropped
-        # (the old join form produced an empty join; keep that contract)
-        return vectors
-    cent_ids = cent_pd["centroid_id"].to_numpy()
-    cent_mat = np.array(
-        [np.asarray(v, dtype=np.float64)[:dim] for v in cent_pd[vec_col]]
-    )
-    # Closure capture, NOT sparkContext.broadcast: an explicit broadcast
-    # would need a matching unpersist after the (lazy) result materializes
-    # or it accumulates blocks across calls in a long-lived driver; the
-    # centroid side is small by contract (_collect_small_side cap), so
-    # shipping it inside the serialized task closure — like every other
-    # mapInPandas helper in this module — has the same per-stage cost with
-    # no lifetime to manage.
-    id_type = dict(vectors.dtypes)[id_col]
-    vec_type = dict(vectors.dtypes)[vec_col]
-    cid_type = dict(centroids.dtypes)["centroid_id"]
-
-    def _mat(vals) -> np.ndarray:
-        # per-row slice-then-array: tolerant of ragged lengths ≥ dim where
-        # np.stack would raise on the whole batch
-        return np.array([np.asarray(v, dtype=np.float64)[:dim] for v in vals])
-
-    def route(batches):
-        c_ids, c_mat = cent_ids, cent_mat
-        for pdf in batches:
-            # NULL/short embeddings can't be clustered, so they can't be
-            # dropped: leaving them out of the assignment keeps them in the
-            # final anti-join output — the old NULL-cosine contract, and a
-            # crash here would fail the whole dedup for one bad row
-            ok = pdf[vec_col].map(lambda v: v is not None and len(v) >= dim)
-            pdf = pdf[ok]
-            if len(pdf) == 0:
-                continue
-            V = _mat(pdf[vec_col])
-            pdf = pdf[[id_col, vec_col]].copy()
-            pdf["centroid_id"] = _np_assign(V, c_ids, c_mat)
-            yield pdf
-
-    assigned = fan_out_python_stage(vectors.select(id_col, vec_col)).mapInPandas(
-        route,
-        schema=f"{id_col} {id_type}, {vec_col} {vec_type}, centroid_id {cid_type}",
-    )
+    # NULL/short embeddings get a NULL centroid id: they are never paired,
+    # so they survive the final anti-join
+    assigned = assign_clusters(
+        vectors.select(id_col, vec_col), centroids, id_col=id_col, vec_col=vec_col, dim=dim
+    ).where(F.col("centroid_id").isNotNull())
+    id_type = _id_type(vectors, id_col)
     assigned, part_keys = cap_partition_size(
         assigned,
         ["centroid_id"],
@@ -1546,7 +1301,7 @@ def semantic_dedup(
             return []
         order = np.argsort(ids, kind="stable")
         ids = ids[order]
-        V = _mat(vecs[order])
+        V = _matrix(vecs[order], dim)
         norms = _seq_sqrt_norms(V)
         dropped: set = set()
         for i0 in range(0, len(ids), 512):
@@ -1573,8 +1328,6 @@ def semantic_dedup(
     # trailing (possibly incomplete) run is carried into the next batch;
     # the cluster-size cap bounds the carry. Same exchange count as
     # before (one keyed shuffle); width is input-size-derived.
-    from nexgap_spark.session import adaptive_width
-
     packed = (
         assigned.select(*part_keys, id_col, vec_col)
         .repartition(adaptive_width(vectors), *[F.col(k) for k in part_keys])

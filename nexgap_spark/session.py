@@ -458,12 +458,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all tables as temp views for the SQL API path."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def _plan_stats_bytes(df: DataFrame) -> int:
     """Optimizer size estimate of ``df``'s plan (driver-side metadata, no
     job): on-disk bytes for a parquet scan; RDD-backed lineages
@@ -482,10 +476,10 @@ def _plan_stats_bytes(df: DataFrame) -> int:
 # sf0.1 (0.6 MB documents — 8-wide wins) and sf1.0 (6.6 MB — 32-wide wins);
 # 64 KB/task maps them to widths 10 and ≥104 (capped at cores).  At
 # production scale any real corpus is ≫ cores × 64 KB, so the width is
-# always the core count and at-scale plans are unchanged — the knob only
-# right-sizes toy inputs.  Env-tunable, NOT cluster-tuned: the value encodes
-# per-byte CPU cost of the text/embedding kernels, not the deployment.
-FANOUT_TARGET_BYTES_DEFAULT = 64 * 1024
+# always the core count and at-scale plans are unchanged — the constant only
+# right-sizes toy inputs.  NOT cluster-tuned: the value encodes per-byte CPU
+# cost of the text/embedding kernels, not the deployment.
+FANOUT_TARGET_BYTES = 64 * 1024
 # Mid-weight per-row stages (codec synthesis over id-only frames:
 # milliseconds per row, a few bytes per row) want a finer target than the
 # text/embedding kernels but NOT full core width. Measured on the q119
@@ -502,17 +496,13 @@ def adaptive_width(
 ) -> int:
     """Fan-out width for a CPU-bound per-row stage over ``df``: the input's
     optimizer size estimate divided by the bytes/task target
-    (``target_bytes`` when given, else NEXGAP_FANOUT_TARGET_BYTES, default
-    64 KB/task), clamped to [floor, defaultParallelism].  Unknown sizes
+    (``target_bytes`` when given, else FANOUT_TARGET_BYTES = 64 KB/task),
+    clamped to [floor, defaultParallelism].  Unknown sizes
     (checkpoint-backed lineages) clamp to defaultParallelism — identical to
     the pre-r18 behavior, so the adaptive path can only ever NARROW a
     provably-small input, never under-parallelize an unknown one."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    target = target_bytes if target_bytes is not None else int(
-        os.environ.get("NEXGAP_FANOUT_TARGET_BYTES", str(FANOUT_TARGET_BYTES_DEFAULT))
-    )
-    if target <= 0:
-        return par
+    target = target_bytes if target_bytes is not None else FANOUT_TARGET_BYTES
     width = -(-_plan_stats_bytes(df) // target)
     return int(max(min(par, width), min(par, floor)))
 

@@ -303,7 +303,8 @@ def main() -> None:
             # float column, int8 its qvec tier, PQ its m-byte codes —
             # column pruning charges each probe only for the tier it reads
             sim.build_ivf_index(
-                emb, cents, index_path, quantize=want_int8, pq_codebooks=codebooks
+                emb, cents, index_path, dim=dim, quantize=want_int8,
+                pq_codebooks=codebooks,
             )
             out["index_build_sec"] = round(time.time() - t0, 2)
         out["index_quantized"] = want_int8

@@ -490,26 +490,83 @@ def test_ivf_int8_probe_prunes_and_reranks(spark, tmp_path):
     assert "PartitionFilters" in plan
 
 
-def test_build_ivf_index_engine_escape_hatch(spark, tmp_path):
-    """ADVICE r14: engine='sql' must be reachable from build_ivf_index for
-    NULL-tolerant initial builds (same hatch append_ivf_index has)."""
+def test_build_ivf_index_dirty_corpus_probe(spark, tmp_path):
+    """NULL embeddings get a NULL centroid_id at build and append time: the
+    index keeps them in the NULL partition, and a full-coverage probe of
+    the dirty index equals brute force over the clean rows."""
     from pyspark.sql import functions as F
 
-    from nexgap_spark.operators.similarity import build_ivf_index, load_ivf_index
+    from nexgap_spark.operators.similarity import (
+        append_ivf_index,
+        brute_force_topk,
+        build_ivf_index,
+        ivf_topk_indexed,
+        load_ivf_index,
+    )
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(40)
-    cents = emb.limit(4).select(
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").filter(
+        F.col("vec_id") < 40
+    )
+    dirty = emb.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") % 7 == 0, F.lit(None)).otherwise(F.col("embedding")),
+    )
+    clean = dirty.filter(F.col("embedding").isNotNull())
+    cents = emb.filter(F.col("vec_id").between(1, 4)).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    pa = str(tmp_path / "a")
-    pb = str(tmp_path / "b")
-    build_ivf_index(emb, cents, pa, engine="arrow")
-    build_ivf_index(emb, cents, pb, engine="sql")
-    a, _ = load_ivf_index(spark, pa)
-    b, _ = load_ivf_index(spark, pb)
-    assert {(r.vec_id, r.centroid_id) for r in a.collect()} == {
-        (r.vec_id, r.centroid_id) for r in b.collect()
+    path = str(tmp_path / "ivf")
+    build_ivf_index(dirty.filter(F.col("vec_id") < 20), cents, path)
+    append_ivf_index(dirty.filter(F.col("vec_id") >= 20), path)
+    corpus, _ = load_ivf_index(spark, path)
+    assert corpus.count() == 40
+    assert {
+        r.vec_id for r in corpus.filter(F.col("centroid_id").isNull()).collect()
+    } == {0, 7, 14, 21, 28, 35}
+
+    queries = clean.filter(F.col("vec_id") % 5 == 1)
+    got = sorted(
+        tuple(r) for r in ivf_topk_indexed(queries, path, k=3, nprobe=4).collect()
+    )
+    exact = sorted(
+        (r.q_id, r.n_id, round(r.cos, 6), r.rk)
+        for r in brute_force_topk(queries, clean, k=3).collect()
+    )
+    assert got == exact and len(got) == 3 * queries.count()
+
+
+def test_kmeans_update_string_centroid_ids(spark):
+    """kmeans_update types centroid_id from the centroid table: string ids
+    give the same update as long ids, and NULL embeddings join no cluster."""
+    from pyspark.sql import functions as F
+
+    from nexgap_spark.operators.similarity import kmeans_update
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    cents = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("centroid_id"), "embedding"
+    )
+    cents_s = cents.select(
+        F.concat(F.lit("c"), F.col("centroid_id").cast("string")).alias("centroid_id"),
+        "embedding",
+    )
+    by_long = {
+        (r.centroid_id, r.pos): (r.n_members, r.dim_sum)
+        for r in kmeans_update(emb, cents).collect()
     }
+    upd_s = kmeans_update(emb, cents_s)
+    assert dict(upd_s.dtypes)["centroid_id"] == "string"
+    by_str = {(r.centroid_id, r.pos): (r.n_members, r.dim_sum) for r in upd_s.collect()}
+    assert by_long and by_str == {(f"c{c}", p): v for (c, p), v in by_long.items()}
+
+    dirty = emb.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") % 7 == 0, F.lit(None)).otherwise(F.col("embedding")),
+    )
+    members = sum(
+        r.n_members for r in kmeans_update(dirty, cents).filter("pos = 0").collect()
+    )
+    assert members == dirty.filter(F.col("embedding").isNotNull()).count()
 
 
 def test_append_ivf_index_preserves_quantization(spark, tmp_path):
@@ -546,9 +603,9 @@ def test_append_ivf_index_preserves_quantization(spark, tmp_path):
 
 
 def test_quantize_stage_rejects_null_embeddings(spark, tmp_path):
-    """ADVICE r15: engine='sql' tolerates NULL embeddings at ASSIGNMENT, but
-    quantize=True must not let those rows reach np.stack's opaque shape
-    crash — the quantize stage fails with an actionable message instead."""
+    """NULL embeddings get a NULL centroid at assignment, but quantize=True
+    must not let those rows reach np.stack's opaque shape crash — the
+    quantize stage fails with an actionable message instead."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -561,15 +618,12 @@ def test_quantize_stage_rejects_null_embeddings(spark, tmp_path):
     )
     cents = emb.limit(4).select(F.col("vec_id").alias("centroid_id"), "embedding")
     with pytest.raises(Exception, match="quantize=True requires non-NULL"):
-        build_ivf_index(
-            dirty, cents, str(tmp_path / "ivf"), engine="sql", quantize=True
-        )
+        build_ivf_index(dirty, cents, str(tmp_path / "ivf"), quantize=True)
     # the documented fix works: filter NULLs first
     build_ivf_index(
         dirty.filter(F.col("embedding").isNotNull()),
         cents,
         str(tmp_path / "ivf_clean"),
-        engine="sql",
         quantize=True,
     )
 

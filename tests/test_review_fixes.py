@@ -1093,34 +1093,6 @@ def test_assemble_sf1_segregates_baselines(tmp_path):
     assert out["sf01_totals"]["spark"] == 0.1  # 0.5 - 0.4 inline baseline
 
 
-def test_assign_clusters_arrow_engine_equals_sql(spark):
-    """r14: build_ivf_index switched to the Arrow assign engine (the SQL
-    plan's codegen'd dot chains dominate at K~sqrt(N)); the two engines
-    must route every vector identically — same sequential-fold cosine,
-    same lowest-id tiebreak, same output columns."""
-    from nexgap_spark.operators import similarity as sim
-    from nexgap_spark.session import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
-    cents = emb.filter("vec_id < 7").select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
-    a = sim.assign_clusters(emb, cents, engine="sql")
-    b = sim.assign_clusters(emb, cents, engine="arrow")
-    assert a.columns == b.columns
-    ka = sorted((r["vec_id"], r["centroid_id"]) for r in a.collect())
-    kb = sorted((r["vec_id"], r["centroid_id"]) for r in b.collect())
-    assert ka == kb and len(ka) > 0
-    # string centroid ids survive the Arrow path (same contract as SQL)
-    cents_s = cents.select(
-        F.concat(F.lit("c"), F.col("centroid_id").cast("string")).alias("centroid_id"),
-        "embedding",
-    )
-    bs = sim.assign_clusters(emb, cents_s, engine="arrow")
-    row = bs.limit(1).collect()[0]
-    assert isinstance(row["centroid_id"], str) and row["centroid_id"].startswith("c")
-
-
 def test_broadcast_threshold_scales_with_driver_heap(monkeypatch):
     """r14 memsweep finding: a 2g driver + the flat 64MB broadcast
     threshold dies in broadcast build; the threshold now scales as
@@ -1261,26 +1233,32 @@ def test_fan_out_skips_shuffle_on_wide_inputs(spark):
     )
 
 
-def test_shared_shingles_size_gate(spark):
+def test_shared_shingles_size_gate(spark, monkeypatch):
     """r17: the multi-consumer shingle pass is size-gated — below the
     input-size threshold it stays a plain lazy distinct (recompute per
     consumer beats the checkpoint barrier at toy scale, measured), above
     it the fixed-width table is materialized once (one corpus scan at
     100 TB). Both regimes must produce the identical row set."""
-    from nexgap_spark.operators.dedup import plan_size_bytes, shared_shingles
-    from nexgap_spark.session import load_table
+    from nexgap_spark.operators import dedup
+    from nexgap_spark.operators.dedup import shared_shingles
+    from nexgap_spark.session import _plan_stats_bytes, load_table
 
     docs = load_table(spark, "/root/testdata/sf0.01", "documents")
-    est = plan_size_bytes(docs)
+    est = _plan_stats_bytes(docs)
     assert est > 0
+
+    def gated(df, min_bytes, **kw):
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "SHINGLE_MAT_MIN_BYTES", min_bytes)
+            return shared_shingles(df, **kw)
 
     def is_mat(df):
         # a materialized result IS a bare scan at the plan root (the input
         # being checkpoint-backed must not count, so no substring search)
         return df._jdf.queryExecution().optimizedPlan().nodeName() == "LogicalRDD"
 
-    lazy = shared_shingles(docs, min_bytes=est + 1)
-    mat = shared_shingles(docs, min_bytes=est)
+    lazy = gated(docs, est + 1)
+    mat = gated(docs, est)
     assert not is_mat(lazy)
     assert is_mat(mat)
     assert lazy.exceptAll(mat).isEmpty() and mat.exceptAll(lazy).isEmpty()
@@ -1291,8 +1269,8 @@ def test_shared_shingles_size_gate(spark):
     from nexgap_spark.session import materialize
 
     ckpt = materialize(docs)
-    assert not is_mat(shared_shingles(ckpt, min_bytes=est + 1, size_of=docs))
-    assert is_mat(shared_shingles(ckpt, min_bytes=est, size_of=docs))
+    assert not is_mat(gated(ckpt, est + 1, size_of=docs))
+    assert is_mat(gated(ckpt, est, size_of=docs))
 
 
 def test_dup_groups_single_round_clique_converges(spark):

@@ -25,10 +25,11 @@ def test_wide_table_noop_when_already_wide(spark, tmp_path):
 
 def test_adaptive_width_contracts(spark, monkeypatch):
     """r18: CPU-stage fan-out width derives from the input's optimizer
-    size estimate (bytes / NEXGAP_FANOUT_TARGET_BYTES, default 64 KB),
+    size estimate (bytes / session.FANOUT_TARGET_BYTES, 64 KB),
     clamped to [floor, defaultParallelism]. An unknown/huge estimate and
     heavy=True both clamp to defaultParallelism (the pre-r18 behavior),
     so the adaptive path can only narrow provably-small inputs."""
+    from nexgap_spark import session
     from nexgap_spark.session import (
         adaptive_width,
         fan_out_python_stage,
@@ -41,13 +42,10 @@ def test_adaptive_width_contracts(spark, monkeypatch):
     assert 2 <= w <= par
     # a tiny projection narrows further, but never below the floor
     assert 2 <= adaptive_width(docs.select("doc_id")) <= w
-    # env override: tiny target → width saturates at core count
-    monkeypatch.setenv("NEXGAP_FANOUT_TARGET_BYTES", "1")
-    assert adaptive_width(docs) == par
-    # target <= 0 disables the derivation entirely (always full width)
-    monkeypatch.setenv("NEXGAP_FANOUT_TARGET_BYTES", "0")
-    assert adaptive_width(docs) == par
-    monkeypatch.delenv("NEXGAP_FANOUT_TARGET_BYTES")
+    # tiny target → width saturates at core count
+    with monkeypatch.context() as m:
+        m.setattr(session, "FANOUT_TARGET_BYTES", 1)
+        assert adaptive_width(docs) == par
     # heavy=True keeps the full core-count fan-out for per-row-bound
     # stages regardless of byte size
     narrow_ids = docs.select("doc_id").coalesce(1)
