@@ -310,9 +310,7 @@ class Engine:
             text_col, "text"
         )
         sh = dedup.shingle_table(renamed)
-        sigs = dedup.minhash_signatures(sh, num_hashes=8)
-        cand = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
-        near = dedup.verify_jaccard(cand, sh).filter(F.col("jaccard") >= min_jaccard)
+        near = dedup.near_dup_pairs(sh, min_jaccard=min_jaccard)
         groups = dedup.dup_groups(near).select(F.col("n").alias("doc_id"), "group_id")
         # broadcast only under the shared row cap — a crawl-style corpus can
         # put a large fraction of all docs into near-dup groups, and an

@@ -194,23 +194,6 @@ def convert_nested(value, target: str):
     return value
 
 
-def convert_record(record: dict, target: str) -> dict:
-    """Rewrite a ChatCompletion training record: assistant message contents
-    (F7) and tool definitions (F8)."""
-    out = dict(record)
-    if out.get("messages"):
-        msgs = []
-        for m in out["messages"]:
-            m = dict(m)
-            if m.get("role") == "assistant" and m.get("content"):
-                m["content"] = convert_message(m["content"], target)
-            msgs.append(m)
-        out["messages"] = msgs
-    if out.get("tools"):
-        out["tools"] = convert_nested(out["tools"], target)
-    return out
-
-
 def rewrite_content_udf(target: str):
     """Arrow-batched pandas UDF: content column → rewritten content column."""
     import pandas as pd

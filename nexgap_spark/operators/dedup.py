@@ -499,6 +499,15 @@ def verify_jaccard(
     )
 
 
+def near_dup_pairs(shingles: DataFrame, *, min_jaccard: float = 0.2) -> DataFrame:
+    """Verified near-duplicate pairs over a (doc_id, shingle) table: 8 MinHash
+    functions, LSH with 4 bands of 2 rows, then exact Jaccard >=
+    ``min_jaccard`` on the candidates (columns of :func:`verify_jaccard`)."""
+    sigs = minhash_signatures(shingles, num_hashes=8)
+    cand = lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
+    return verify_jaccard(cand, shingles).filter(F.col("jaccard") >= min_jaccard)
+
+
 def minhash_dedup(
     df: DataFrame,
     *,
@@ -621,178 +630,95 @@ def ngram_jaccard_pairs(
     )
 
 
-# Edge count from which dup_groups writes its bucketed edge store. Below it
-# the label frame broadcasts (4M edges ≈ the 64 MB broadcast threshold at
-# 16 B/row), the edge side is never exchanged, and the store's one-time
-# write would be pure overhead.
-CC_BUCKET_MIN_EDGES = 4_000_000
-
-
-def _bucketed_edge_store(edges: DataFrame):
-    """Write the materialized symmetric edge list ONCE as a bucketed-and-
-    sorted external table on ``m`` and return (bucketed_scan, cleanup).
-
-    Each CC round's ``edges ⋈ labels ON m`` then reads the edge side
-    pre-clustered (FileScan with bucket metadata): no per-round edge
-    exchange, and with one sorted file per bucket no per-round edge sort
-    either — only the (much smaller) label frame is exchanged. The store
-    lives under the reliable checkpoint dir when one is configured, else
-    the session temp root; one table per call, dropped by ``cleanup``.
-
-    Bucket count: defaultParallelism — the cluster-wide core count is the
-    natural reduce-side width for the loop joins this table feeds."""
-    import uuid
-
-    from nexgap_spark.session import _local_mat_root
-    from nexgap_spark.sources.bucketed import read_bucketed, write_bucketed
-
-    spark = edges.sparkSession
-    name = f"nexgap_cc_edges_{uuid.uuid4().hex}"
-    ckdir = spark.sparkContext.getCheckpointDir()
-    root = ckdir.rstrip("/") if ckdir else _local_mat_root()
-    path = f"{root}/{name}"
-    buckets = spark.sparkContext.defaultParallelism
-    write_bucketed(
-        edges, name, path, bucket_cols=["m"], buckets=buckets, sort_cols=["m"]
-    )
-
-    def cleanup() -> None:
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            jvm = spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(path)
-            fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-            fs.delete(jpath, True)
-        except Exception:  # noqa: BLE001 — best-effort; the dir is reaped
-            # with the checkpoint/temp root either way
-            logging.getLogger(__name__).warning(
-                "[dup_groups] failed to drop edge store %s", name
-            )
-
-    return read_bucketed(spark, name), cleanup
-
-
 def dup_groups(
     pairs: DataFrame,
     *,
     a_col: str = "a",
     b_col: str = "b",
-    max_iterations: int = 20,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair graph → (node, group_id)
-    with group_id = the smallest node id reachable from the node.
+    with group_id = the smallest node id reachable from the node. NULL ids
+    are not nodes.
 
-    Hash-min label propagation: every node starts labeled with itself; each
-    round, a node adopts the minimum label among itself and its neighbors;
-    stop when a round changes nothing. Rounds needed = graph diameter — for
-    near-dup graphs that is tiny (dup clusters are cliques or short chains),
-    so the loop count is data-bounded, not O(V). A component longer than
-    ``max_iterations`` rounds is NOT final: the loop warns and reports
-    ``converged=0`` on the returned plan.
+    Large-star/small-star (Kiveris et al., "Connected Components in
+    MapReduce and Beyond", SoCC 2014). The state is an edge list of
+    (hi, lo) rows, hi >= lo. Each round rewrites it twice:
 
-    Each round is one groupBy over the edge list (shuffle on node id); labels
-    stay (node, label) pairs — the standard large-scale CC recipe short of
-    GraphFrames. Round 1 is computed directly as ``least(n, min(m))`` off the
-    edge list (every node starts labeled with itself), which saves the node
-    set, the join and the union of the general round.
+    * large-star, grouped by node u over both edge directions: with
+      ``m = least(u, min(neighbours))``, every edge (x, u) with x >= u
+      becomes (x, m), and u gains the edge (u, m);
+    * small-star, grouped by hi: with ``mm = min(lo)``, hi keeps only
+      (hi, mm) and each of its other lo's becomes (lo, mm).
 
-    Materialization: the symmetric edge list is materialized ONCE before the
-    loop (its upstream is typically the whole shingle→minhash→LSH→verify
-    pipeline, which every round would otherwise replay), and each round's
-    label frame is materialized so the next round reads rows instead of a
-    lineage that deepens by one join per round. Both route through
-    session.materialize, so a configured checkpoint dir makes the loop
-    survive executor loss. Above ``CC_BUCKET_MIN_EDGES`` edges the edge list
-    is written once as a bucketed-and-sorted table on ``m``, so the rounds'
-    sort-merge joins read a pre-clustered edge side instead of re-exchanging
-    it every round.
+    Both steps keep every component connected and only lower lo's. The
+    loop stops after the first round in which small-star finds every hi
+    with a single lo. That edge list is already the answer: every node u
+    holds only (u, m(u)), so m is equal across each stored edge, hence
+    constant on a component, and the component's smallest node is its own
+    m. So there is one row per node, (n, min) for members and (min, min)
+    for the centre. Rounds grow with the log of the diameter, not with the
+    diameter: 12 for a 10k-node chain over shuffled ids, 1 for stars and
+    cliques.
 
-    Convergence: labels only decrease, so a round changed nothing iff no
-    node's new label is below its previous one. Each round's groupBy carries
-    the previous label as ``own`` next to the new minimum, and the count of
-    ``label < own`` is observed during the round's own materialize action —
-    one check for every id type, and no extra job.
+    Each round is one materialize with the count of multi-lo rows observed
+    in the same action. Round 1 reads ``pairs`` directly, so the upstream
+    pipeline runs once; later rounds read the previous round's rows, and
+    every materialize goes through session.materialize (reliable under a
+    checkpoint dir). Both aggregations shuffle to defaultParallelism
+    partitions: their shuffles are small in bytes but CPU-heavy, and AQE's
+    byte-based coalescing would run them on one or two tasks. A round holds
+    a node's distinct neighbours in one array, so memory per task grows
+    with the largest component, not with the edge count.
     """
     from pyspark.sql import Observation
 
-    if max_iterations < 1:
-        raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
-    sym = (
-        pairs.select(F.col(a_col).alias("n"), F.col(b_col).alias("m"))
-        .unionByName(pairs.select(F.col(b_col).alias("n"), F.col(a_col).alias("m")))
-        .distinct()
-    )
-    # exact edge count fused into the materialize action: it gates the
-    # bucketed edge store
-    edge_obs = Observation(f"dup_groups_edges_{next(_OBSERVE_SEQ)}")
-    edges = materialize(sym.observe(edge_obs, F.count(F.lit(1)).alias("c")))
-    edge_store_cleanup = None
-    if int(edge_obs.get["c"]) >= CC_BUCKET_MIN_EDGES:
-        edges, edge_store_cleanup = _bucketed_edge_store(edges)
-    # Reliable mode: round N's materialize reads only round N-1 and the
-    # returned frame reads only the last round, so a generation handle keeps
-    # the live checkpoint dirs at 2 instead of one per round. The edge list
-    # is NOT on the handle — every round reads it.
+    edges = pairs.select(
+        F.greatest(a_col, b_col).alias("hi"), F.least(a_col, b_col).alias("lo")
+    ).filter(F.col("lo").isNotNull())
+    # Reliable mode: round N reads only round N-1 and the returned frame
+    # reads only the last round, so two live generations suffice.
     gen = MaterializeGen(keep=2)
+    par = pairs.sparkSession.sparkContext.defaultParallelism
 
-    def _round(frame: DataFrame) -> tuple[DataFrame, int]:
-        """Materialize one round's (n, label, own) frame as (n, label) and
-        return it with the number of nodes whose label dropped."""
+    def _round(edges: DataFrame) -> tuple[DataFrame, int]:
+        both = edges.select(F.col("lo").alias("u"), F.col("hi").alias("x")).unionByName(
+            edges.select(F.col("hi").alias("u"), F.col("lo").alias("x"))
+        )
+        large = (
+            both.repartition(par, "u")
+            .groupBy("u")
+            .agg(
+                F.least(F.col("u"), F.min("x")).alias("lo"),
+                F.collect_set(F.when(F.col("x") > F.col("u"), F.col("x"))).alias("kids"),
+            )
+            .select(F.explode(F.concat(F.array("u"), F.col("kids"))).alias("hi"), "lo")
+        )
+        small = (
+            large.repartition(par, "hi")
+            .groupBy("hi")
+            .agg(F.min("lo").alias("lo"), F.collect_set("lo").alias("los"))
+            .select(
+                F.explode(
+                    F.array_union(F.array("hi"), F.array_remove("los", F.col("lo")))
+                ).alias("hi"),
+                "lo",
+                F.size("los").alias("n_lo"),
+            )
+        )
         obs = Observation(f"dup_groups_changed_{next(_OBSERVE_SEQ)}")
-        changed = F.count(F.when(F.col("label") < F.col("own"), 1))
+        changed = F.count(F.when(F.col("n_lo") > 1, 1))
         out = materialize(
-            frame.observe(obs, changed.alias("c")).select("n", "label"), gen=gen
+            small.observe(obs, changed.alias("c")).select("hi", "lo"), gen=gen
         )
         return out, int(obs.get["c"])
 
-    try:
-        labels, changed = _round(
-            edges.groupBy("n")
-            .agg(F.min("m").alias("_mm"))
-            .select(
-                "n",
-                F.least(F.col("n"), F.col("_mm")).alias("label"),
-                F.col("n").alias("own"),
-            )
-        )
-        rounds_used = 1
-        while changed and rounds_used < max_iterations:
-            # new label = min over the node's own label and its neighbors'
-            neigh = (
-                edges.join(labels.withColumnRenamed("n", "m"), "m")
-                .select("n", "label", F.lit(None).alias("own"))
-                .unionByName(labels.withColumn("own", F.col("label")))
-                .groupBy("n")
-                .agg(F.min("label").alias("label"), F.max("own").alias("own"))
-            )
-            labels, changed = _round(neigh)
-            rounds_used += 1
-        converged = not changed
-        if not converged:
-            # a chain-shaped component is longer than max_iterations and its
-            # labels are NOT final. A driver print is invisible on a cluster:
-            # warn AND carry the status on the returned plan (below).
-            import warnings
-
-            warnings.warn(
-                f"[dup_groups] label propagation did not converge in "
-                f"{max_iterations} rounds; group ids for long-chain components "
-                "are unstable — raise max_iterations",
-                stacklevel=2,
-            )
-    finally:
-        # the returned frame reads only the last round's labels, never the
-        # edge table — safe to drop it here (and on any mid-loop failure)
-        if edge_store_cleanup is not None:
-            edge_store_cleanup()
-    out = labels.select(F.col("n"), F.col("label").alias("group_id"))
-    # convergence was decided driver-side by the eager loop, so the metric
-    # carries literals: zero extra compute on the consuming action, but
-    # visible wherever the plan is executed.
-    return out.observe(
-        f"dup_groups_convergence_{next(_OBSERVE_SEQ)}",
-        F.max(F.lit(1 if converged else 0)).alias("converged"),
-        F.max(F.lit(rounds_used)).alias("rounds_used"),
+    rounds_used, changed = 0, True
+    while changed:
+        edges, changed = _round(edges)
+        rounds_used += 1
+    return edges.select(F.col("hi").alias("n"), F.col("lo").alias("group_id")).observe(
+        f"dup_groups_rounds_{next(_OBSERVE_SEQ)}",
+        F.coalesce(F.max(F.lit(rounds_used)), F.lit(rounds_used)).alias("rounds_used"),
     )
 
 

@@ -89,10 +89,6 @@ def resolve_converter(
     return OPENAI_DEFAULT if use_openai_format else NEXAU_DEFAULT
 
 
-def registered_frameworks() -> dict[str, ConverterStrategy]:
-    return dict(_REGISTRY)
-
-
 def _make_default_registrations() -> None:
     """The two frameworks the reference ships configs for (NexA4A's agent
     format validates in 'a4a' mode; NexAU XML in 'nexau' mode)."""

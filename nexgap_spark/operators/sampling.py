@@ -17,14 +17,12 @@ from pyspark.sql import functions as F
 
 # Distinct default seeds per operator: F.rand(seed) is a pure function of
 # (partition, row position), so two operators sharing one default seed over
-# the same DataFrame draw IDENTICAL uniforms per row — e.g. the difficulty
-# bucket would fully determine the template pick. Each marginal looks fine;
+# the same DataFrame draw IDENTICAL uniforms per row — e.g. the truncation
+# draw would fully determine the categorical pick. Each marginal looks fine;
 # the joint distribution is degenerate. Callers overriding seeds should
 # keep them distinct per operator for the same reason.
 SEED_TRUNCATE = 137
 SEED_PICK = 211
-SEED_UNIFORM = 307
-SEED_TEMPLATE = 401
 
 
 def inverse_frequency_weights(
@@ -229,13 +227,6 @@ def pick_by_distribution(
     return df.withColumn(out_col, expr).drop(ucol)
 
 
-def uniform_pick(df: DataFrame, *, n: int = 1, seed: int = SEED_UNIFORM) -> DataFrame:
-    """R1: uniform sample of n rows (reference random.choice of personas,
-    pipeline.py:714-716). orderBy(rand(seed)).limit(n) — the sort is on the
-    sampled key only; for large inputs prefer df.sample() upstream."""
-    return df.orderBy(F.rand(seed)).limit(n)
-
-
 def deterministic_sample(
     df: DataFrame,
     *,
@@ -275,20 +266,6 @@ def stratified_sample(
     return ranked.filter(
         F.col("_rk") <= F.ceil(F.col("_n") * F.lit(fraction))
     ).drop("_rk", "_n")
-
-
-def random_template_choice(
-    df: DataFrame,
-    templates: list[str],
-    *,
-    out_col: str = "template",
-    seed: int = SEED_TEMPLATE,
-) -> DataFrame:
-    """R6: random detail-level template choice (reference
-    query_generator.py:568-598)."""
-    arr = F.array(*[F.lit(t) for t in templates])
-    idx = (F.floor(F.rand(seed) * len(templates)) + 1).cast("int")
-    return df.withColumn(out_col, F.element_at(arr, idx))
 
 
 def rebalance_groups(

@@ -47,15 +47,3 @@ def sessionize(
     ).cast("int")
     w_run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
     return df.withColumn("session_id", F.sum(is_new).over(w_run))
-
-
-def session_stats(sessions: DataFrame, *, user_col: str = "user_id", ts_col: str = "ts") -> DataFrame:
-    """Per-session summary: bounds, duration, event count."""
-    return sessions.groupBy(user_col, "session_id").agg(
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
-        F.count("*").alias("n_events"),
-        (F.unix_timestamp(F.max(ts_col)) - F.unix_timestamp(F.min(ts_col))).alias(
-            "duration_s"
-        ),
-    )

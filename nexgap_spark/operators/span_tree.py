@@ -682,17 +682,6 @@ def resolve_root(
     return reduce(DataFrame.unionByName, done).drop("_cursor")
 
 
-def agent_distribution(spans: DataFrame) -> DataFrame:
-    """A2 (reference :1857-1877): agent_name → count."""
-    return spans.groupBy("agent_name").agg(F.count("*").alias("n"))
-
-
-def sort_chronologically(spans: DataFrame) -> DataFrame:
-    """O1 (reference langfuse_utils.py:102): global order by startTime.
-    Total order via range partitioning — only use on bounded outputs."""
-    return spans.orderBy(F.to_timestamp("startTime"), F.col("span_id"))
-
-
 def number_rows(df: DataFrame, *, order_col: str, out_col: str = "seq") -> DataFrame:
     """W2/W3 (reference get_trace.py:44-56, pipeline.py:796-804): sequential
     numbering. Single-partition window — apply only to small/pre-aggregated

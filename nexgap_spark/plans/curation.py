@@ -902,9 +902,7 @@ def corpus_pipeline(
     # is the conservative huge default); survivors ≤ input, so gating on
     # the input only ever errs toward the at-scale (materialize) shape.
     sh = dedup.shared_shingles(s2, size_of=docs)
-    sigs = dedup.minhash_signatures(sh, num_hashes=8)
-    cand = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
-    near = dedup.verify_jaccard(cand, sh).filter(F.col("jaccard") >= 0.2)
+    near = dedup.near_dup_pairs(sh)
     groups = dedup.dup_groups(near).select(F.col("n").alias("doc_id"), "group_id")
     sizes = groups.groupBy("group_id").agg(F.count("*").alias("group_size"))
     membership = groups.join(sizes, "group_id")

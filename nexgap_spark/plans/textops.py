@@ -447,8 +447,8 @@ def q33_binary_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # q43 — near-duplicate GROUPS: connected components over the verified LSH
-# pair graph (dedup.dup_groups: hash-min label propagation, one materialize
-# per round with its convergence count observed in the same action; oracle =
+# pair graph (dedup.dup_groups: large-star/small-star, one materialize per
+# round with its change count observed in the same action; oracle =
 # recursive CTE reachability). The cluster-then-keep-one shape every
 # large-scale dedup pipeline ends with.
 # ---------------------------------------------------------------------------
@@ -474,9 +474,7 @@ def q43_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     # size-gated shared shingle pass — rationale at q31 (r17)
     sh = dedup.shared_shingles(docs)
-    sigs = dedup.minhash_signatures(sh, num_hashes=8)
-    cand = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
-    near = dedup.verify_jaccard(cand, sh).filter(F.col("jaccard") >= 0.2)
+    near = dedup.near_dup_pairs(sh)
     groups = dedup.dup_groups(near)
     return groups.select(F.col("n").alias("doc_id"), "group_id")
 
@@ -516,9 +514,7 @@ def q44_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     # size-gated shared shingle pass — rationale at q31 (r17)
     sh = dedup.shared_shingles(docs)
-    sigs = dedup.minhash_signatures(sh, num_hashes=8)
-    cand = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
-    near = dedup.verify_jaccard(cand, sh).filter(F.col("jaccard") >= 0.2)
+    near = dedup.near_dup_pairs(sh)
     groups = dedup.dup_groups(near).select(
         F.col("n").alias("doc_id"), "group_id"
     )
@@ -920,9 +916,7 @@ def q116_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents")
     # size-gated shared shingle pass — rationale at q31 (r17)
     sh = dedup.shared_shingles(docs)
-    sigs = dedup.minhash_signatures(sh, num_hashes=8)
-    cand = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
-    near = dedup.verify_jaccard(cand, sh).filter(F.col("jaccard") >= 0.2)
+    near = dedup.near_dup_pairs(sh)
     groups = dedup.dup_groups(near).select(F.col("n").alias("doc_id"), "group_id")
     assigned = curation.leakage_safe_split(docs, groups, weights=_Q116_WEIGHTS)
     eff = F.coalesce(F.col("group_id"), F.col("doc_id"))

@@ -170,7 +170,7 @@ def get_spark(
 
 class MaterializeGen:
     """Generation handle for ITERATIVE materialize loops (connected
-    components' per-round labels): reliable-mode `materialize` writes one
+    components' per-round edge lists): reliable-mode `materialize` writes one
     parquet directory per call and nothing reaps them until the checkpoint
     dir is deleted — an unbounded ~rounds × |frame| of dead storage in a
     loop (ADVICE r16 / VERDICT r16 item 4). A loop that passes the same
@@ -182,7 +182,7 @@ class MaterializeGen:
 
     ONLY safe for linear lineages: the caller must guarantee nothing
     retains a plan over a generation older than ``keep`` (dup_groups'
-    labels qualify — the returned frame reads only the final path; the
+    edge lists qualify — the returned frame reads only the final path; the
     taxonomy sampling loop does NOT, its returned union references every
     round's counts, and keeps the default unreaped behavior).
 

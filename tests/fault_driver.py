@@ -75,9 +75,7 @@ def main() -> int:
 
     def pipeline(docs_df, *, flaky_pairs=False):
         sh = dedup.shingle_table(docs_df)
-        sigs = dedup.minhash_signatures(sh, num_hashes=8)
-        cand = dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
-        near = dedup.verify_jaccard(cand, sh).filter(F.col("jaccard") >= 0.2)
+        near = dedup.near_dup_pairs(sh)
         if flaky_pairs:
             near = flaky(near)
         groups = dedup.dup_groups(near).select(F.col("n").alias("doc_id"), "group_id")

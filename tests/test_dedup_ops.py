@@ -370,57 +370,39 @@ def test_blocked_near_dup_arrow_anchor_chunking(spark):
     assert full == chunked and len(full) == 25 * 24 // 2
 
 
-def test_dup_groups_bucketed_edge_store(spark, monkeypatch):
-    """r18: above the edge-count gate the CC loop reads its static edge
-    list from a bucketed-and-sorted table on m (no per-round edge exchange
-    in the sort-merge regime) — identical groups to the checkpoint shape,
-    and the per-call table/files are dropped when the loop returns."""
-    from nexgap_spark.operators import dedup
+def _dup_groups_jobs(spark, pairs, group: str) -> tuple[dict, int]:
+    """(node -> group_id, Spark jobs) of one dup_groups call plus its collect."""
     from nexgap_spark.operators.dedup import dup_groups
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
-        "a long, b long",
-    )
-
-    def groups(df):
-        return sorted((r.n, r.group_id) for r in df.collect())
-
-    baseline = groups(dup_groups(pairs))
-    before_tables = {t.name for t in spark.catalog.listTables()}
-    monkeypatch.setattr(dedup, "CC_BUCKET_MIN_EDGES", 1)
-    bucketed = groups(dup_groups(pairs))
-    assert bucketed == baseline
-    # the per-call edge table was dropped on the way out
-    after_tables = {t.name for t in spark.catalog.listTables()}
-    assert not {t for t in after_tables - before_tables if "nexgap_cc_edges" in t}
-    # multi-round convergence through the bucketed store: a 6-chain needs
-    # > 2 rounds, exercising repeated reads of the table
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(30, 36)], "a long, b long"
-    )
-    out = dup_groups(chain)
-    assert {r.group_id for r in out.collect()} == {30}
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        got = {r.n: r.group_id for r in dup_groups(pairs).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return got, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.mark.parametrize("schema", ["a long, b long", "a string, b string"])
 def test_dup_groups_job_budget_six_chain(spark, schema):
-    """Spark jobs of one dup_groups call plus its collect on a 6-chain
-    (7 rounds, the last one unchanged). Every round is one materialize
-    with the convergence count observed in it, so string ids cost the same
-    jobs as long ids; any extra per-round barrier shows up here."""
-    from nexgap_spark.operators.dedup import dup_groups
-
+    """A 6-chain takes 4 rounds. Every round is one materialize over two
+    aggregations with its change count observed in it, so string ids cost
+    the same jobs as long ids; any extra per-round barrier shows up here."""
     cast = str if schema.startswith("a string") else int
     pairs = spark.createDataFrame(
         [(cast(i), cast(i + 1)) for i in range(30, 36)], schema
     )
-    sc = spark.sparkContext
-    group = f"dup_groups_budget_{cast.__name__}"
-    sc.setJobGroup(group, group)
-    try:
-        got = {r.group_id for r in dup_groups(pairs).collect()}
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert got == {cast(30)}
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 35
+    got, jobs = _dup_groups_jobs(spark, pairs, f"dup_groups_budget_{cast.__name__}")
+    assert set(got.values()) == {cast(30)}
+    assert jobs == 13
+
+
+def test_dup_groups_job_budget_stars_and_clique(spark):
+    """Stars and cliques, the shape of q44's near-dup graphs: one round,
+    which leaves one star per component and needs no confirming round."""
+    pairs = spark.createDataFrame(
+        [(7, 8), (8, 9), (7, 9), (20, 21)], "a long, b long"
+    )
+    got, jobs = _dup_groups_jobs(spark, pairs, "dup_groups_budget_stars")
+    assert got == {7: 7, 8: 7, 9: 7, 20: 20, 21: 20}
+    assert jobs == 4

@@ -198,9 +198,9 @@ def test_materialize_generation_reaping(spark, tmp_path):
         assert {os.path.basename(p) for p in gen.live_paths} == set(mat_dirs())
         assert df.count() == 10  # newest generation readable after reaping
 
-        # CC loop end-to-end: chain 0-1-2-3-4-5-6-7 (hash-min needs ~6
-        # rounds to pull label 0 to the far end) — dir count stays bounded
-        # at edges(1) + 2 label generations, and groups are correct
+        # CC loop end-to-end: chain 0-1-2-3-4-5-6-7 (several rounds) — dir
+        # count stays bounded at 2 edge-list generations, and groups are
+        # correct
         chain = spark.createDataFrame(
             [(i, i + 1) for i in range(7)], "a long, b long"
         )

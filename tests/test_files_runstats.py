@@ -187,34 +187,6 @@ def test_url_parts_adversarial_inputs(spark):
     assert by_url["no-scheme/path/x.bin"].ok is False
 
 
-def test_dup_groups_nonconvergence_warns(spark):
-    import pytest
-
-    from nexgap_spark.operators.dedup import dup_groups
-
-    # a 12-node chain needs ~11 rounds; max_iterations=2 must warn loudly
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "a long, b long"
-    )
-    with pytest.warns(UserWarning, match="did not converge"):
-        out = dup_groups(pairs, max_iterations=2)
-    # and the returned plan carries the convergence status as an observed
-    # metric (visible to listeners on a cluster, where a driver warning from
-    # an earlier stage may never be seen by the consumer of the frame)
-    plan = out._jdf.queryExecution().analyzed().toString()
-    assert "dup_groups_convergence" in plan
-    out.collect()
-
-
-def test_dup_groups_converged_no_warning(spark, recwarn):
-    from nexgap_spark.operators.dedup import dup_groups
-
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
-    got = {r.n: r.group_id for r in dup_groups(pairs, max_iterations=10).collect()}
-    assert got == {1: 1, 2: 1, 3: 1}
-    assert not [w for w in recwarn if "did not converge" in str(w.message)]
-
-
 def test_run_summary_null_status_and_empty(spark):
     df = spark.createDataFrame(
         [(1, "success"), (2, None), (3, "failed")], "id long, status string"

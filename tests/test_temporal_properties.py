@@ -179,31 +179,9 @@ def test_range_join_matches_bruteforce(spark, case):
     assert got == want
 
 
-@PROP
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=30), st.integers(min_value=0, max_value=30)
-        ),
-        min_size=1,
-        max_size=40,
-    ),
-    st.booleans(),
-)
-# no pairs at all; a string-id chain needing many rounds ("10" < "2": the
-# string order is not the integer order, so the labels walk a different path)
-@example(edges=[], as_str=False)
-@example(edges=[(i, i + 1) for i in range(12)], as_str=True)
-def test_dup_groups_matches_bruteforce_components(spark, edges, as_str):
-    from nexgap_spark.operators.dedup import dup_groups
-
-    if as_str:
-        edges = [(str(a), str(b)) for a, b in edges]
-    schema = "a string, b string" if as_str else "a long, b long"
-    pairs = spark.createDataFrame(edges, schema)
-    got = {r.n: r.group_id for r in dup_groups(pairs).collect()}
-    # brute-force union-find: group id = min node id of the component
-    parent: dict[int, int] = {}
+def _components(edges) -> dict:
+    """Union-find oracle: node -> smallest node id of its component."""
+    parent: dict = {}
 
     def find(x):
         parent.setdefault(x, x)
@@ -216,8 +194,87 @@ def test_dup_groups_matches_bruteforce_components(spark, edges, as_str):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in parent}
-    assert got == want
+    return {n: find(n) for n in parent}
+
+
+def _chain(ids) -> list[tuple[int, int]]:
+    return list(zip(ids, ids[1:]))
+
+
+def _assert_dup_groups_match(spark, edges, schema="a long, b long") -> int:
+    """dup_groups equals the union-find oracle and raises no warning;
+    returns the rounds it used (read from the metric on the returned plan)."""
+    import warnings
+
+    from nexgap_spark.operators.dedup import dup_groups
+
+    pairs = spark.createDataFrame(edges, schema)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = dup_groups(pairs)
+        got = {r.n: r.group_id for r in out.collect()}
+    assert got == _components(edges)
+    assert not [str(w.message) for w in caught if issubclass(w.category, UserWarning)]
+    metrics = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        out._jdf.queryExecution().observedMetrics()
+    )
+    (row,) = [v for k, v in metrics.items() if k.startswith("dup_groups_rounds_")]
+    return int(row.getAs("rounds_used"))
+
+
+# 0..25 in a fixed shuffled order, so neighbouring ids on the chain are far
+# apart
+_SHUFFLED_26 = [
+    17, 3, 22, 9, 0, 14, 25, 6, 11, 19, 2, 23, 8, 15, 1, 20, 12, 5, 24, 10,
+    18, 4, 13, 21, 7, 16,
+]
+
+
+@PROP
+@given(
+    st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=30), st.integers(min_value=0, max_value=30)
+        ),
+        min_size=1,
+        max_size=40,
+    ),
+    st.booleans(),
+)
+# no pairs at all; a string-id chain ("10" < "2": the string order is not
+# the integer order, so the labels walk a different path); a 3-node path;
+# a 26-node chain with its smallest id at one end (hash-min label
+# propagation needed 25 rounds for it) and the same chain over shuffled ids
+@example(edges=[], as_str=False)
+@example(edges=_chain(range(13)), as_str=True)
+@example(edges=[(1, 2), (2, 3)], as_str=False)
+@example(edges=_chain(range(26)), as_str=False)
+@example(edges=_chain(_SHUFFLED_26), as_str=False)
+def test_dup_groups_matches_bruteforce_components(spark, edges, as_str):
+    if as_str:
+        edges = [(str(a), str(b)) for a, b in edges]
+    schema = "a string, b string" if as_str else "a long, b long"
+    _assert_dup_groups_match(spark, edges, schema)
+
+
+def test_dup_groups_random_graph_matches_union_find(spark):
+    """4000 random edges over 5000 ids: one component of 3184 nodes, 313 of
+    them more than 20 hops from its minimum."""
+    import random
+
+    rnd = random.Random(2)
+    edges = [(rnd.randrange(5000), rnd.randrange(5000)) for _ in range(4000)]
+    assert _assert_dup_groups_match(spark, edges) <= 10
+
+
+def test_dup_groups_long_shuffled_chain_matches_union_find(spark):
+    """A 10k-node chain over shuffled ids (diameter 9999) finishes in a
+    number of rounds logarithmic in its length."""
+    import random
+
+    ids = list(range(10_000))
+    random.Random(3).shuffle(ids)
+    assert _assert_dup_groups_match(spark, _chain(ids)) <= 20
 
 
 @st.composite
