@@ -187,6 +187,15 @@ def test_url_parts_adversarial_inputs(spark):
     assert by_url["no-scheme/path/x.bin"].ok is False
 
 
+def test_dup_groups_converged_no_warning(spark, recwarn):
+    from nexgap_spark.operators.dedup import dup_groups
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
+    got = {r.n: r.group_id for r in dup_groups(pairs).collect()}
+    assert got == {1: 1, 2: 1, 3: 1}
+    assert not [w for w in recwarn if "did not converge" in str(w.message)]
+
+
 def test_run_summary_null_status_and_empty(spark):
     df = spark.createDataFrame(
         [(1, "success"), (2, None), (3, "failed")], "id long, status string"
